@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.engine.SqlEngine
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -17,7 +18,7 @@ object Verify {
     // local[8]) to flush out order-dependent accumulation. The driver
     // passes no env, so gate behavior is unchanged.
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
+    val spark = SqlEngine.jvmDefaults(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffle)
       .config("spark.sql.session.timeZone", "UTC")

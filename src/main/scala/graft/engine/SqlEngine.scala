@@ -29,6 +29,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    SparkSession.
  *  - Spill stays enabled (reference disables its disk manager,
  *    `src/core.rs:55`, because WASM has no disk) — a strict superset.
+ *
+ * JVM-wide defaults ([[SqlEngine.jvmDefaults]], applied by `newSession`):
+ *  - `spark.sql.codegen.cache.maxEntries` = [[SqlEngine.CodegenCacheEntries]].
+ *    Spark caches generated classes per (class loader, source) in one
+ *    JVM-wide cache of 100 entries. Every class is cached twice (driver
+ *    and executor class loader), so a single curation query fills most
+ *    of it and a deck of statements evicts its own classes and
+ *    recompiles them with Janino on every call. The cache is sized to
+ *    the engine's working set instead, so each plan shape compiles once.
+ *  - `spark.sql.ui.retainedExecutions`, `spark.ui.retainedJobs` and
+ *    `spark.ui.retainedStages` = [[SqlEngine.RetainedStatus]]. With the
+ *    UI off nothing reads this status, yet Spark keeps 1,000 of each,
+ *    plan descriptions included, on the driver heap.
+ * These are static settings: Spark reads them once, when the JVM's
+ * first SparkContext (and first code generator) starts. The first
+ * context wins — a caller that builds its own SparkContext before
+ * `newSession` keeps Spark's 100-entry cache; apply
+ * [[SqlEngine.jvmDefaults]] to that builder to get the same sizing.
  */
 class SqlEngine(val spark: SparkSession) {
 
@@ -177,10 +195,30 @@ object SqlEngine {
     * is a wiring smoke test; ours identifies this engine. */
   def greet(): String = "hello from graft-spark"
 
+  /** Generated-class cache size: a curation deck fills 129 entries, a
+    * façade deck ~180 stable ones plus ~80 from stages whose literals are
+    * inlined into the source; Guava splits the bound across 4 segments,
+    * so the size leaves headroom. */
+  val CodegenCacheEntries = 512
+
+  /** SQL executions, jobs and stages the driver keeps status for. */
+  val RetainedStatus = 50
+
+  /** The JVM-wide settings every context this project builds carries
+    * (see the class doc). Only static settings live here: each builder
+    * keeps its own session semantics (time zone, ANSI, partitions). */
+  def jvmDefaults(builder: SparkSession.Builder): SparkSession.Builder =
+    builder
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.ui.retainedExecutions", RetainedStatus.toLong)
+      .config("spark.ui.retainedJobs", RetainedStatus.toLong)
+      .config("spark.ui.retainedStages", RetainedStatus.toLong)
+
   /** Session factory mirroring `DataFusionContext::new()` defaults the
-    * engine relies on (UTC session, ANSI on, AQE on). */
+    * engine relies on (UTC session, ANSI on, AQE on), plus the
+    * [[jvmDefaults]]. */
   def newSession(master: String = "local[*]"): SqlEngine = {
-    val spark = SparkSession.builder()
+    val spark = jvmDefaults(SparkSession.builder())
       .master(master)
       .appName("graft-sql-engine")
       .config("spark.sql.session.timeZone", "UTC")

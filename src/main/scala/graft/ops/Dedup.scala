@@ -410,7 +410,11 @@ object Dedup {
       val next =
         if ((iter + 1) % 3 == 0) joined.localCheckpoint(eager = false)
         else joined.persist(StorageLevel.MEMORY_AND_DISK)
-      val changed = next.filter(col("__chg")).limit(1).count()
+      // the round's one action. Only `changed == 0` is tested, so a plain
+      // count serves; no `limit(1)`: each LimitExec names its counter from
+      // a JVM-wide sequence, so a limit would make every round generate
+      // (and compile) new source instead of reusing the cached classes
+      val changed = next.filter(col("__chg")).count()
       pinned.unpersist(blocking = false) // superseded — release each round
       pinned = next
       labels = next.select(col("doc_id"), col("label")) // served by the pin

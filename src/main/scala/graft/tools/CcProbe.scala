@@ -83,7 +83,7 @@ object CcProbe {
         if ((iter + 1) % 3 == 0) joined.localCheckpoint(eager = false)
         else joined.persist(StorageLevel.MEMORY_AND_DISK)
       var changed = 0L
-      val tIter = t { changed = next.filter(col("__chg")).limit(1).count() }
+      val tIter = t { changed = next.filter(col("__chg")).count() }
       println(f"  iter $iter: $tIter%.2f s (changed=$changed)")
       pinned.unpersist(blocking = false)
       pinned = next

@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.engine.SqlEngine
+
 /** One shared local session for the whole test run. */
 object TestSessions {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = SqlEngine.jvmDefaults(SparkSession.builder())
     .master("local[4]")
     .appName("graft-tests")
     .config("spark.sql.shuffle.partitions", "4")
