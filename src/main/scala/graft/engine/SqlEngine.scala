@@ -130,9 +130,9 @@ class SqlEngine(val spark: SparkSession) {
     // shape; unsupported shapes raise the documented clean error inside
     // the rewrite. Runs first — the other rewrites then see the
     // restructured text.
-    // alias + info-schema rewrites apply only outside string literals;
     // SIMILAR TO locates the keyword on a same-length literal mask (its
-    // pattern IS a literal, but the keyword must sit outside one)
+    // pattern IS a literal, but the keyword must sit outside one); the
+    // info-schema rewrite applies only outside string literals.
     // the resolver lets the GROUPS rewrite PROVE an expression subquery
     // uncorrelated (r06): a body that fully analyzes standalone (catalog
     // + temp views, no outer scope) cannot reference an outer row, so
@@ -141,26 +141,26 @@ class SqlEngine(val spark: SparkSession) {
     val groupsRewritten = Dialect.withResolver(
       s => scala.util.Try(spark.sql(s)).isSuccess)(
       Dialect.rewriteGroupsFrames(stmt))
-    val aliased = Dialect.rewriteAggFirstLast(
-      Dialect.rewriteGenerateSeries(Dialect.rewriteSimilarTo(
-        Dialect.outsideLiterals(groupsRewritten)(
-          graft.functions.GapFillers.rewriteAliases))))
-    val translated = DdlTranslator.translate(aliased, rewriteS3Url)
+    val sparkText = Dialect.rewriteAggFirstLast(
+      Dialect.rewriteGenerateSeries(Dialect.rewriteSimilarTo(groupsRewritten)))
+    val translated = DdlTranslator.translate(sparkText, rewriteS3Url)
     val rewritten =
       if (InfoSchema.mentionsInfoSchema(Dialect.maskLiterals(translated))) {
         InfoSchema.refresh(spark)
         Dialect.outsideLiterals(translated)(InfoSchema.rewrite)
       } else translated
-    // MEDIAN/PERCENTILE_CONT anywhere in a query: rewrite the analyzed
-    // plan's Aggregates onto the sort-based rank selection
-    // (graft.ops.Percentiles) instead of Spark's
-    // per-group-value-buffering aggregates — bit-identical results,
-    // bounded memory at any group size (VERDICT r03 #1; plan-level
-    // since r05, so joins/CTEs/HAVING/mixed lists qualify too). Runs on
-    // the fully-translated text so dialect constructs (SIMILAR TO,
-    // GROUPS, generate_series) compose with the bounded plan;
-    // non-matching shapes fall through to the normal path, never an
-    // error.
+    // One spark.sql per statement: it parses and analyzes the text, and
+    // runs a command (DDL/DML) eagerly, exactly once. DataFusion's
+    // function spellings (`to_hex`, `approx_distinct`, ...) resolve here
+    // through the registry entries `GapFillers.register` adds.
+    // Then the plan-level percentile match: when the analyzed plan
+    // carries MEDIAN/PERCENTILE_CONT anywhere (joins, CTEs, HAVING,
+    // mixed lists, views), its Aggregates are rewritten onto the
+    // sort-based rank selection (graft.ops.Percentiles) instead of
+    // Spark's per-group-value-buffering aggregates — bit-identical
+    // results, bounded memory at any group size (VERDICT r03 #1).
+    // Commands come back as a `CommandResult` with no Aggregate, and
+    // non-matching shapes keep this DataFrame, never an error.
     // SURFACE CONTRACT (ADVICE r05): planning a matching percentile
     // statement may run a small Spark job HERE, at executeStatement
     // time, before the returned DataFrame is ever acted on — the
@@ -168,13 +168,13 @@ class SqlEngine(val spark: SparkSession) {
     // (grouping/value columns only, memoized per plan shape, and
     // skipped entirely when catalog/CBO statistics answer the
     // cardinality question and pick the default mode, r06).
-    val df = PercentilePlanner.tryPlan(spark, rewritten)
-      .getOrElse(spark.sql(rewritten))
+    val sparkDf = spark.sql(rewritten)
+    val df = PercentilePlanner.rewrite(spark, sparkDf).getOrElse(sparkDf)
     // hive-style partition discovery parity: the reference's listing
     // tables see partition dirs immediately; Spark catalog tables must
     // register them (scans of a pre-partitioned LOCATION are empty
     // otherwise)
-    DdlTranslator.externalTableName(aliased).foreach { name =>
+    DdlTranslator.externalTableName(sparkText).foreach { name =>
       val plain = name.replace("`", "").replace("\"", "")
       if (scala.util.Try(spark.catalog.listColumns(plain).collect()
             .exists(_.isPartition)).getOrElse(false)) {

@@ -20,9 +20,12 @@ import org.apache.spark.unsafe.types.UTF8String
  *     translation), the `encode`/`decode` hex|base64 dispatchers, and
  *     `approx_median`. These are cold-path functions — CodegenFallback is
  *     acceptable; the hot relational path stays whole-stage codegen.
- *  2. **Name aliases** (`rewriteAliases`) applied by the engine pre-parse
- *     where DataFusion and Spark differ only in spelling
- *     (`approx_distinct`→`approx_count_distinct`, `to_hex`→`hex`, …).
+ *  2. **Name aliases** (`aliases`) where DataFusion and Spark differ
+ *     only in spelling (`approx_distinct`→`approx_count_distinct`,
+ *     `to_hex`→`hex`, …): registry entries built from the target's
+ *     builtin builder, so Catalyst resolves them like any function —
+ *     in `spark.sql` and `expr()` too, not only in `executeSql`.
+ *     `string_agg` needs no entry: Spark ships it.
  *
  * Known non-goals (documented, matching SURVEY §7.5): `current_time` /
  * the TIME type (Spark has none). GROUPS window frames are emulated at
@@ -401,16 +404,19 @@ object GapFillers {
       }
       new org.apache.spark.sql.catalyst.expressions.aggregate.Percentile(x, p, freq)
     }
+    aliases.foreach { case (alias, target) =>
+      f(alias)(FunctionRegistry.builtin.lookupFunctionBuilder(FunctionIdentifier(target)).get)
+    }
   }
 
   // ------------------------------------------------------------ aliases
 
-  /** Pure-rename shims (same argument shapes). Applied textually by the
-    * engine pre-parse; word-boundary + '(' anchored. */
+  /** DataFusion spellings of Spark builtins with the same argument
+    * shapes. `register` binds each one to its target's builtin builder,
+    * so a call builds the target's expression and prints its header. */
   val aliases: Map[String, String] = Map(
     "approx_distinct" -> "approx_count_distinct",
     "approx_percentile_cont" -> "percentile_approx",
-    "string_agg" -> "listagg",
     "substr_index" -> "substring_index",
     "to_unixtime" -> "unix_timestamp",
     "to_timestamp_seconds" -> "timestamp_seconds",
@@ -419,17 +425,4 @@ object GapFillers {
     "to_hex" -> "hex",
     "today" -> "current_date",
     "list_sort" -> "sort_array")
-
-  /** Textual alias application. CONTRACT: callers must wrap this in
-    * `Dialect.outsideLiterals` (as `SqlEngine.executeStatement` does) —
-    * applied raw it would also rewrite alias-shaped words inside string
-    * literals and comments. It receives literal-free segments only, so
-    * no masking is done here (segments contain bare delimiter quotes;
-    * re-masking them would hide everything after, r04 review round
-    * trip). Pinned by SqlEngineSpec "alias rewriting never fires inside
-    * string literals" + SplitterPropertySpec's outsideLiterals property. */
-  def rewriteAliases(sql: String): String =
-    aliases.foldLeft(sql) { case (s, (from, to)) =>
-      s.replaceAll("(?i)\\b" + from + "\\s*\\(", to + "(")
-    }
 }

@@ -379,6 +379,7 @@ object Dedup {
     var labels = pinned
     var converged = false
     var iter = 0
+    // graft.tools.CcProbe keeps a timed copy of this loop: change both
     while (!converged && iter < maxIter) {
       // One aggregate per round, no label re-join (r12 optimization
       // round, guide §2): the round's new label is min(own label,

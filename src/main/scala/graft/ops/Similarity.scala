@@ -96,7 +96,7 @@ object Similarity {
     * carries little beyond dimension i.
     *
     * One corpus pass, STRUCTURALLY: each row generates its `d(d+1)/2`
-    * upper-triangle terms `(i, j, x_i·x_j, x_i, x_j)` from a single
+    * upper-triangle terms `(i, j, x_i·x_j, x_i)` from a single
     * Generate, and one partial→final hash aggregate keyed on (i, j)
     * decimal-sums the product terms plus a diagonal-only mean sum
     * ([[fitMoments]]); the means re-attach from the diagonal rows by

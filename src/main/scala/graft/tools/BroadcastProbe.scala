@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.engine.SqlEngine
 import graft.ops.{Similarity, TextAnalysis}
 import graft.tables.Tables
 
@@ -42,7 +43,7 @@ object BroadcastProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(30)
     val out = "/tmp/graft_broadcastprobe"
-    val spark = SparkSession.builder()
+    val spark = SqlEngine.jvmDefaults(SparkSession.builder())
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
@@ -147,12 +148,14 @@ object BroadcastProbe {
     // without paying for a 100×+ fixture. Explicit broadcast() HINTS
     // (lshTopK's query side, bigram's one-row total) stay honored,
     // which is exactly the operator contract at 100 TB.
+    val thresholdKeys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val savedThresholds = thresholdKeys.map(k => k -> spark.conf.getOption(k))
     def noBroadcast[T](fn: => T): T = {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      try fn finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+      thresholdKeys.foreach(spark.conf.set(_, "-1"))
+      try fn finally savedThresholds.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
     }
     for ((tag0, d) <- Seq("1x" -> d1, s"${factor}x" -> dN);

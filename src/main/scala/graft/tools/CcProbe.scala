@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.engine.SqlEngine
 import graft.ops.Dedup
 import graft.tables.Tables
 
@@ -19,7 +20,7 @@ object CcProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = SqlEngine.jvmDefaults(SparkSession.builder()).master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()

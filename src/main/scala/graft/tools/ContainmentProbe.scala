@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.SqlEngine
 import graft.tables.Tables
 
 /** Dev probe (VERDICT r11 #7): measure the x118 rare-postings blocking's
@@ -20,7 +21,7 @@ object ContainmentProbe {
     val dir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val maxDf = args.lift(1).map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = SqlEngine.jvmDefaults(SparkSession.builder()).master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.engine.SqlEngine
+
 /** Dev tool: dump EXPLAIN FORMATTED for headline queries → PLANS.md,
   * the artifact backing the scale-design claims in README. */
 object Explain {
@@ -73,7 +75,7 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
+    val spark = SqlEngine.jvmDefaults(SparkSession.builder()).master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

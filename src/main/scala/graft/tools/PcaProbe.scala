@@ -3,12 +3,14 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.engine.SqlEngine
+
 /** Dev probe: attribute the x98-family wall time (fit collect vs
   * projection scan vs final sort) — guide §1 measurement. */
 object PcaProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = SqlEngine.jvmDefaults(SparkSession.builder()).master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.engine.SqlEngine
+
 /** Dev tool: dump EXPLAIN FORMATTED for the named queries, one file per
   * query, into an output directory — the per-round before/after plan
   * evidence (`plans/r11/<query>_before.txt` / `..._after.txt`).
@@ -19,7 +21,7 @@ object PlanDump {
     val suffix = args(2)
     val only = args.drop(3).toSet
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder().master("local[8]")
+    val spark = SqlEngine.jvmDefaults(SparkSession.builder()).master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.SqlEngine
 import graft.ops.{Dedup, Dsir, Similarity, TextAnalysis}
 import graft.tables.Tables
 
@@ -35,7 +36,7 @@ object ScaleProbe {
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val only = args.lift(2)
     val out = "/tmp/graft_scaleprobe"
-    val spark = SparkSession.builder()
+    val spark = SqlEngine.jvmDefaults(SparkSession.builder())
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))

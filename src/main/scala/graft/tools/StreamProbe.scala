@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.engine.SqlEngine
+
 /** Dev probe: attribute the stream-replay rows' wall time to micro-batches
   * (per-batch durationMs breakdown from StreamingQueryProgress) — guide §1
   * measurement for the x90/x94/x136 family.
@@ -20,7 +22,7 @@ import org.apache.spark.sql.streaming.OutputMode
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = SqlEngine.jvmDefaults(SparkSession.builder()).master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()

@@ -57,7 +57,7 @@ class PercentilePlannerPropertySpec extends AnyFunSuite {
                  |FROM pp_prop_t GROUP BY g ORDER BY g""".stripMargin
             else
               s"SELECT MEDIAN(v) AS m, ${res.mkString(", ")} FROM pp_prop_t"
-          val fast = PercentilePlanner.tryPlan(spark, sql)
+          val fast = PercentilePlanner.rewrite(spark, spark.sql(sql))
           assert(fast.isDefined, s"did not engage: $sql")
           val got = fast.get.collect()
           val ref = spark.sql(sql).collect()

@@ -30,7 +30,7 @@ class PercentilePlannerSpec extends AnyFunSuite {
 
   /** Engages, carries no buffered percentile, matches buffered bitwise. */
   private def assertScalePlan(sql: String): Unit = {
-    val fast = PercentilePlanner.tryPlan(spark, sql)
+    val fast = PercentilePlanner.rewrite(spark, spark.sql(sql))
     assert(fast.isDefined, s"fast path did not engage on: $sql")
     val plan = fast.get.queryExecution.executedPlan.toString
     assert(!plan.toLowerCase.contains("percentile") && !plan.contains("Median"),
@@ -136,7 +136,7 @@ class PercentilePlannerSpec extends AnyFunSuite {
           |  MIN(l_extendedprice) AS mn, MAX(l_extendedprice) AS mx,
           |  COUNT(l_linestatus) AS nc, COUNT(*) AS n
           |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
-      val fast = PercentilePlanner.tryPlan(spark, mixed)
+      val fast = PercentilePlanner.rewrite(spark, spark.sql(mixed))
       assert(fast.isDefined)
       assert(scanCount(fast.get) == 1,
         s"expected ONE scan, got:\n${fast.get.queryExecution.executedPlan}")
@@ -151,7 +151,7 @@ class PercentilePlannerSpec extends AnyFunSuite {
           |  SUM(l_quantity) FILTER (WHERE l_linenumber <= 2) AS s2,
           |  COUNT(DISTINCT l_linenumber) AS dl
           |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
-      val fast = PercentilePlanner.tryPlan(spark, q)
+      val fast = PercentilePlanner.rewrite(spark, spark.sql(q))
       assert(fast.isDefined)
       assert(scanCount(fast.get) == 1,
         s"expected ONE scan, got:\n${fast.get.queryExecution.executedPlan}")
@@ -168,7 +168,7 @@ class PercentilePlannerSpec extends AnyFunSuite {
           |  ROUND(PERCENTILE_CONT(0.5) WITHIN GROUP (ORDER BY l_quantity) / 2, 3) AS h
           |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
       assertScalePlan(q)
-      assert(scanCount(PercentilePlanner.tryPlan(spark, q).get) == 1)
+      assert(scanCount(PercentilePlanner.rewrite(spark, spark.sql(q)).get) == 1)
     } }
   }
 
@@ -190,7 +190,7 @@ class PercentilePlannerSpec extends AnyFunSuite {
         """SELECT MEDIAN(l_quantity) AS m, SUM(l_quantity) AS s,
           |  COUNT(l_quantity) AS c, COUNT(*) AS n
           |FROM lineitem WHERE l_quantity < 0""".stripMargin
-      val fast = PercentilePlanner.tryPlan(spark, q)
+      val fast = PercentilePlanner.rewrite(spark, spark.sql(q))
       assert(fast.isDefined)
       assert(fast.get.collect().sameElements(spark.sql(q).collect()),
         "empty-input defaults (null, null, 0, 0) must match the buffered plan")
@@ -214,7 +214,7 @@ class PercentilePlannerSpec extends AnyFunSuite {
       val hi = """SELECT l_orderkey, MEDIAN(l_quantity) AS m, SUM(l_quantity) AS s
         FROM pstats_t GROUP BY l_orderkey ORDER BY l_orderkey"""
       val before = graft.ops.Percentiles.probeRuns.get()
-      val fastHi = PercentilePlanner.tryPlan(spark, hi)
+      val fastHi = PercentilePlanner.rewrite(spark, spark.sql(hi))
       assert(fastHi.isDefined)
       assert(graft.ops.Percentiles.probeRuns.get() == before,
         "stats-backed planning must not launch a probe scan")
@@ -225,7 +225,7 @@ class PercentilePlannerSpec extends AnyFunSuite {
       // range mode (boundaries still need the one bounds probe)
       val lo = """SELECT l_returnflag, MEDIAN(l_quantity) AS m
         FROM pstats_t GROUP BY l_returnflag ORDER BY l_returnflag"""
-      val fastLo = PercentilePlanner.tryPlan(spark, lo)
+      val fastLo = PercentilePlanner.rewrite(spark, spark.sql(lo))
       assert(fastLo.isDefined)
       assert(fastLo.get.queryExecution.executedPlan.toString.contains("__pct_b"),
         "low-cardinality stats must pick the range mode")
@@ -311,7 +311,7 @@ class PercentilePlannerSpec extends AnyFunSuite {
         """SELECT l_returnflag, MEDIAN(l_quantity) AS m,
           |  (SELECT MEDIAN(o_totalprice) FROM orders) AS global_med
           |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
-      val fast = PercentilePlanner.tryPlan(spark, mixed)
+      val fast = PercentilePlanner.rewrite(spark, spark.sql(mixed))
       assert(fast.isDefined)
       assert(fast.get.collect().sameElements(spark.sql(mixed).collect()))
     }
@@ -342,7 +342,7 @@ class PercentilePlannerSpec extends AnyFunSuite {
   test("global aggregate over empty input still emits its one null row") {
     withTables {
       val q = "SELECT MEDIAN(l_quantity) AS m FROM lineitem WHERE l_quantity < 0"
-      val fast = PercentilePlanner.tryPlan(spark, q)
+      val fast = PercentilePlanner.rewrite(spark, spark.sql(q))
       assert(fast.isDefined)
       val rows = fast.get.collect()
       assert(rows.length == 1 && rows(0).isNullAt(0),
@@ -358,60 +358,90 @@ class PercentilePlannerSpec extends AnyFunSuite {
         // DISTINCT percentile keeps the buffered form
         "SELECT percentile(DISTINCT l_quantity, 0.5) AS m FROM lineitem GROUP BY l_returnflag",
         // array-of-percentages keeps the buffered form
-        "SELECT percentile(l_quantity, array(0.25, 0.5)) AS m FROM lineitem GROUP BY l_returnflag",
-        // DDL/DML must never be probed (spark.sql would run it eagerly) —
-        // the parse-based gate (r06) catches every command spelling, not
-        // a keyword list: CTAS, MERGE/UPDATE/DELETE, and INSERT OVERWRITE
-        // DIRECTORY (an InsertIntoDir node, neither Command nor
-        // ParsedStatement in Spark 4.1's grammar)
-        "CREATE TABLE never_made AS SELECT MEDIAN(l_quantity) AS m FROM lineitem",
-        "MERGE INTO never_made USING lineitem ON 1 = 1 WHEN MATCHED THEN DELETE",
-        "UPDATE never_made SET m = (SELECT MEDIAN(l_quantity) FROM lineitem)",
-        "DELETE FROM never_made WHERE m > (SELECT MEDIAN(l_quantity) FROM lineitem)",
-        "INSERT OVERWRITE DIRECTORY '/tmp/graft_never_written' USING parquet " +
-          "SELECT MEDIAN(l_quantity) AS m FROM lineitem")
+        "SELECT percentile(l_quantity, array(0.25, 0.5)) AS m FROM lineitem GROUP BY l_returnflag")
       shapes.foreach { s =>
-        assert(PercentilePlanner.tryPlan(spark, s).isEmpty, s"engaged on: $s")
+        assert(PercentilePlanner.rewrite(spark, spark.sql(s)).isEmpty, s"engaged on: $s")
       }
-      assert(!spark.catalog.tableExists("never_made"),
-        "tryPlan executed a DDL statement")
-      // WITH-prefixed DML is still DML: probing it would run the INSERT
-      // twice (r05 review)
-      spark.sql("CREATE OR REPLACE TEMP VIEW med_sink_src AS SELECT 1 AS v")
-      spark.sql("DROP TABLE IF EXISTS med_sink")
-      spark.sql("CREATE TABLE med_sink(v DOUBLE) USING parquet")
-      try {
-        val withDml =
-          "WITH m AS (SELECT MEDIAN(l_quantity) AS v FROM lineitem) " +
-            "INSERT INTO med_sink SELECT v FROM m"
-        assert(PercentilePlanner.tryPlan(spark, withDml).isEmpty)
-        assert(spark.table("med_sink").count() == 0,
-          "tryPlan executed WITH-prefixed DML")
-        engine.executeStatement(withDml)
-        assert(spark.table("med_sink").count() == 1,
-          "the engine must run the statement exactly once")
-      } finally spark.sql("DROP TABLE IF EXISTS med_sink")
       // a nondeterministic child would feed each rewrite branch a
       // different sample — buffered plan stays (r05 review)
-      assert(PercentilePlanner.tryPlan(spark,
+      assert(PercentilePlanner.rewrite(spark, spark.sql(
         """SELECT l_returnflag, MEDIAN(l_quantity) AS m, SUM(l_quantity) AS s
           |FROM (SELECT * FROM lineitem WHERE rand() < 0.5)
-          |GROUP BY l_returnflag""".stripMargin).isEmpty,
+          |GROUP BY l_returnflag""".stripMargin)).isEmpty,
         "engaged on a nondeterministic child")
       // and the buffered path still answers the DISTINCT form
       assert(engine.executeStatement(shapes(1)).count() > 0)
     }
   }
 
-  test("dialect-only WHERE falls back from tryPlan but the engine still scale-plans it") {
+  test("DDL/DML with a percentile runs exactly once through the engine") {
+    // spark.sql runs a command eagerly, once; the planner then sees its
+    // CommandResult, which carries no Aggregate to rewrite
     withTables {
-      // SIMILAR TO is not Spark SQL: a direct tryPlan must return None
-      // (fallback, not an error, VERDICT r04 next #7)...
+      spark.sql("DROP TABLE IF EXISTS med_ctas")
+      spark.sql("DROP TABLE IF EXISTS med_sink")
+      val dir = java.nio.file.Files.createTempDirectory("graft_med_dir").toString
+      try {
+        val median = "SELECT MEDIAN(l_quantity) AS m FROM lineitem"
+        val expected = spark.sql(median).collect().toSeq
+        // a second run of the CTAS would fail on the existing table
+        engine.executeStatement(s"CREATE TABLE med_ctas USING parquet AS $median")
+        assert(spark.table("med_ctas").collect().toSeq == expected)
+        // WITH-prefixed DML is still DML: running it twice would insert
+        // two rows (r05 review)
+        spark.sql("CREATE TABLE med_sink(v DOUBLE) USING parquet")
+        engine.executeStatement(
+          "WITH m AS (SELECT MEDIAN(l_quantity) AS v FROM lineitem) " +
+            "INSERT INTO med_sink SELECT v FROM m")
+        assert(spark.table("med_sink").count() == 1,
+          "the engine must run the statement exactly once")
+        // INSERT OVERWRITE DIRECTORY (an InsertIntoDir node, neither
+        // Command nor ParsedStatement in Spark 4.1's grammar)
+        engine.executeStatement(s"INSERT OVERWRITE DIRECTORY '$dir/out' USING parquet $median")
+        assert(spark.read.parquet(s"$dir/out").collect().toSeq == expected)
+        // v1 parquet tables reject row-level DML: Spark's error surfaces
+        // and the target keeps its one row
+        Seq(
+          "MERGE INTO med_sink USING lineitem ON 1 = 1 WHEN MATCHED THEN DELETE",
+          "UPDATE med_sink SET v = (SELECT MEDIAN(l_quantity) FROM lineitem)",
+          "DELETE FROM med_sink WHERE v > (SELECT MEDIAN(l_quantity) FROM lineitem)"
+        ).foreach { s =>
+          intercept[Exception](engine.executeStatement(s))
+          assert(spark.table("med_sink").count() == 1, s"target changed by: $s")
+        }
+      } finally {
+        spark.sql("DROP TABLE IF EXISTS med_ctas")
+        spark.sql("DROP TABLE IF EXISTS med_sink")
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      }
+    }
+  }
+
+  test("percentiles behind a view take the scale plan through the engine") {
+    withTables {
+      spark.sql(
+        """CREATE OR REPLACE TEMP VIEW med_by_flag AS
+          |SELECT l_returnflag, MEDIAN(l_quantity) AS m
+          |FROM lineitem GROUP BY l_returnflag""".stripMargin)
+      try {
+        val q = "SELECT * FROM med_by_flag ORDER BY l_returnflag"
+        val df = engine.executeStatement(q)
+        val plan = df.queryExecution.executedPlan.toString
+        assert(!plan.toLowerCase.contains("percentile") && !plan.contains("Median"), plan)
+        assert(df.collect().sameElements(spark.sql(q).collect()))
+      } finally spark.catalog.dropTempView("med_by_flag")
+    }
+  }
+
+  test("dialect-only WHERE: Spark rejects the raw text, the engine still scale-plans it") {
+    withTables {
+      // SIMILAR TO is not Spark SQL: spark.sql rejects the raw text, so
+      // the planner never sees it (VERDICT r04 next #7)...
       val dialect =
         """SELECT l_returnflag, MEDIAN(l_quantity) AS m
           |FROM lineitem WHERE l_returnflag SIMILAR TO '(A|R)'
           |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
-      assert(PercentilePlanner.tryPlan(spark, dialect).isEmpty)
+      intercept[org.apache.spark.sql.catalyst.parser.ParseException](spark.sql(dialect))
       // ...while the engine translates the dialect FIRST and then takes
       // the scale plan (r05 ordering)
       val df = engine.executeStatement(dialect)

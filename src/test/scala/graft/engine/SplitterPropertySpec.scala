@@ -36,9 +36,10 @@ class SplitterPropertySpec extends AnyFunSuite {
   }
 
   test("property: outsideLiterals leaves literal contents untouched") {
+    val renameToday = (seg: String) => seg.replaceAll("(?i)\\btoday\\s*\\(", "current_date(")
     samples(Gen.zip(word, word)).foreach { case (a, b) =>
       val sql = s"SELECT '$a today( $b' AS x, today() AS d"
-      val out = Dialect.outsideLiterals(sql)(graft.functions.GapFillers.rewriteAliases)
+      val out = Dialect.outsideLiterals(sql)(renameToday)
       assert(out.contains(s"'$a today( $b'"))
       assert(out.contains("current_date() AS d"))
     }

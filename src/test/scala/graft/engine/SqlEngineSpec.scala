@@ -1003,13 +1003,13 @@ class SqlEngineSpec extends AnyFunSuite {
 
   test("alias rewriting never fires inside string literals or comments") {
     // r04 review: the raw replaceAll turned 'call me today (noon)' into
-    // 'call me current_date(noon)' — alias matches now come off the
-    // masked text
+    // 'call me current_date(noon)' — aliases now resolve as function
+    // registry entries, so no text pass touches literals or comments
     engine.setResultFormat(ResultFormat.Json)
     try {
       assert(engine.executeSql("SELECT 'call me today (noon)' AS s") ==
         """[{"s":"call me today (noon)"}]""")
-      // while real alias calls in code position still rewrite
+      // while real alias calls in code position still resolve
       assert(engine.executeSql(
         "SELECT to_hex(255) AS h -- today (reminder)\n") == """[{"h":"FF"}]""")
     } finally engine.setResultFormat(ResultFormat.Table)

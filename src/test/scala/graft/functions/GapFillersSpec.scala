@@ -186,4 +186,26 @@ class GapFillersSpec extends AnyFunSuite {
     assert(one("SELECT (today() = current_date) AS same") == """[{"same":true}]""")
     assert(one("SELECT to_unixtime(TIMESTAMP '1970-01-01 00:01:00') AS u") == """[{"u":60}]""")
   }
+
+  test("aliases are registry entries: spark.sql and expr() resolve them, headers unchanged") {
+    val spark = TestSessions.spark
+    engine // building an SqlEngine registers the entries on its session
+    assert(spark.sql("SELECT to_hex(255) AS h").head().getString(0) == "FF")
+    assert(spark.range(4).selectExpr("approx_distinct(id % 3) AS d").head().getLong(0) == 3L)
+    assert(engine.executeStatement("SELECT to_hex(255)").columns.toSeq == Seq("hex(255)"))
+    // every alias builds its target's expression: same header, same value
+    val calls = Seq("approx_distinct(x)", "approx_percentile_cont(x, 0.5)",
+      "substr_index('a.b.c', '.', 2)", "to_unixtime(TIMESTAMP '1970-01-01 00:01:00')",
+      "to_timestamp_seconds(60)", "to_timestamp_millis(60000)",
+      "to_timestamp_micros(60000000)", "to_hex(255)", "today()", "list_sort(array(3, 1, 2))")
+    assert(calls.map(_.takeWhile(_ != '(')).toSet == GapFillers.aliases.keySet)
+    calls.foreach { call =>
+      val name = call.takeWhile(_ != '(')
+      def from(c: String) = s"SELECT $c FROM VALUES (1.5), (2.5) t(x)"
+      val ours = engine.executeStatement(from(call))
+      val target = spark.sql(from(GapFillers.aliases(name) + call.drop(name.length)))
+      assert(ours.columns.toSeq == target.columns.toSeq, call)
+      assert(ours.collect().toSeq == target.collect().toSeq, call)
+    }
+  }
 }
