@@ -21,6 +21,9 @@ object InfoSchema {
 
   private val Ref = """(?i)information_schema\.(tables|views|columns|df_settings)""".r
 
+  /** Left out of every listing, so a statement answers the same each call. */
+  private val OwnViews = Set("tables", "views", "columns", "df_settings").map("information_schema__" + _)
+
   def mentionsInfoSchema(stmt: String): Boolean = Ref.findFirstIn(stmt).isDefined
 
   /** Rewrite `information_schema.x` → `information_schema__x`. */
@@ -33,7 +36,7 @@ object InfoSchema {
 
     val catalogName = "spark_catalog"
     val db = spark.catalog.currentDatabase
-    val tables = spark.catalog.listTables().collect()
+    val tables = spark.catalog.listTables().collect().filterNot(t => OwnViews(t.name))
 
     tables.map(t => (catalogName, Option(t.database).getOrElse(db),
         t.name, if (t.tableType == "VIEW" || t.isTemporary) "VIEW" else "BASE TABLE"))

@@ -306,8 +306,8 @@ object Relational {
   }
 
   // ---------------------------------------------------------------- q17
-  // lag/lead over the events table — also exercises the TIMESTAMP(NANOS)
-  // read path (Tables.load truncates ns→µs identically to DuckDB).
+  // lag/lead over the events table — also exercises the timestamp read
+  // path (Tables.load casts the naive µs column to a UTC instant).
   val q17 = Q.df(
     "q17_window_lag_lead",
     """SELECT event_id, user_id, ts, value,

@@ -1,9 +1,13 @@
 package graft.tables
 
-import java.util.concurrent.ConcurrentHashMap
-
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
 /**
  * Registry of the shared test-fixture tables (TESTDATA.md / FIXTURES.md) as
@@ -11,21 +15,16 @@ import org.apache.spark.sql.functions._
  * catalog (reference: `src/core.rs:47-72` builds a `SessionContext` whose
  * tables are file-backed; ours are parquet-backed temp views).
  *
- * Scale notes (100 TB design):
- *  - Views are plain `spark.read.parquet` scans — Catalyst pushes filters and
- *    prunes columns into the scan, so downstream operators only pay for what
- *    they use. No caching/materialization here: at 100 TB the tables do not
- *    fit in memory and the scan must stream.
- *  - `events.ts` has shipped in two fixture vintages: parquet
- *    TIMESTAMP(NANOS) (pre-r06), which Spark's vectorized reader rejects —
- *    read nanos as raw longs (`spark.sql.legacy.parquet.nanosAsLong`) and
- *    convert with `timestamp_micros(ns / 1000)`, the same truncation DuckDB
- *    applies casting TIMESTAMP_NS → TIMESTAMP — and plain TIMESTAMP(MICROS)
- *    (r06 driver regen), which reads as TIMESTAMP_NTZ and is cast to a
- *    session-tz instant (every graft session pins UTC, so the wall-clock
- *    values match DuckDB's naive reads exactly). The branch keys on the
- *    OBSERVED schema, so either vintage loads identically. Both conversions
- *    are codegen'd expressions; the scan stays vectorized and distributed.
+ * Each table is one parquet file whose schema, as in the reference, comes
+ * from its footer, read on the driver with Spark's own converter: no
+ * schema-inference job. A type Spark cannot read, such as TIMESTAMP(NANOS),
+ * fails there with Spark's error. Naive TIMESTAMP(MICROS) columns read as
+ * TIMESTAMP_NTZ and are cast to session-tz instants (graft sessions pin UTC,
+ * so wall-clock values match DuckDB's naive reads).
+ *
+ * Scale notes (100 TB design): views are plain parquet scans — Catalyst
+ * pushes filters and prunes columns into the scan. No caching here: at
+ * 100 TB the tables do not fit in memory and the scan must stream.
  */
 object Tables {
   val names: Seq[String] = Seq(
@@ -34,31 +33,24 @@ object Tables {
 
   // temp views are session-global: track which dir each session's views
   // currently point at, and re-register whenever it changes (a keyed
-  // "already done" set would silently leave views on the previous dir)
-  private val registeredDir = new ConcurrentHashMap[SparkSession, String]()
+  // "already done" set would silently leave views on the previous dir);
+  // weak keys, so a session nobody else holds can be collected
+  private val registeredDir = new java.util.WeakHashMap[SparkSession, String]()
+
+  /** The Spark schema of one parquet file, from its footer (no job). */
+  private def footerSchema(spark: SparkSession, file: String): StructType = {
+    val path = new Path(file)
+    val conf = spark.sessionState.newHadoopConf()
+    val status = path.getFileSystem(conf).getFileStatus(path)
+    val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(status, conf), NO_FILTER)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 
   /** Read one fixture table from `dir` (no view registration). */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val raw = if (name == "events") {
-      // TIMESTAMP(NANOS) vintage: read ns-as-long, truncate to micros.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val r = spark.read.parquet(s"$dir/events.parquet")
-      val ts = r.schema("ts").dataType match {
-        // integer div: `/` on longs is fractional (double) and ns epochs
-        // exceed double's 2^53 exact range
-        case LongType => timestamp_micros(expr("ts div 1000"))
-        case _        => col("ts") // µs vintage: generic NTZ pass below
-      }
-      r.withColumn("ts", ts)
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-    } else {
-      spark.read.parquet(s"$dir/$name.parquet")
-    }
-    // r06 fixture regen: timestamp columns became naive micros and read as
-    // TIMESTAMP_NTZ. Cast every NTZ column to a session-tz instant (all
-    // graft sessions pin UTC), keeping output schemas — and DuckDB
-    // wall-clock parity — identical to the judged TimestampType vintage.
+    val file = s"$dir/$name.parquet"
+    val raw = spark.read.schema(footerSchema(spark, file)).parquet(file)
     raw.schema.fields.filter(_.dataType == TimestampNTZType).foldLeft(raw) {
       (d, f) => d.withColumn(f.name, col(f.name).cast(TimestampType))
     }

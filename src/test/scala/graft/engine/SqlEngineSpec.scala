@@ -56,6 +56,18 @@ class SqlEngineSpec extends AnyFunSuite {
     assert(out.contains("some_col"))
   }
 
+  test("information_schema never lists its own views: a repeated statement answers the same") {
+    for (q <- Seq(
+        "SELECT table_name FROM information_schema.tables ORDER BY table_name",
+        "SELECT table_name, column_name FROM information_schema.columns " +
+          "ORDER BY table_name, ordinal_position")) {
+      val first = engine.executeSql(q)
+      val second = engine.executeSql(q)
+      assert(first == second, q)
+      assert(!first.contains("information_schema__"), first)
+    }
+  }
+
   test("df_settings exposes session configuration") {
     val out = engine.executeSql(
       "SELECT name FROM information_schema.df_settings WHERE name = 'spark.sql.session.timeZone'")
