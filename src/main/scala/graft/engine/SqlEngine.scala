@@ -60,7 +60,7 @@ class SqlEngine(val spark: SparkSession) {
     hc.setIfUnset("fs.https.impl", classOf[graft.sources.HttpsFileSystem].getName)
   }
 
-  private var resultFormat: ResultFormat = ResultFormat.Table
+  @volatile private var resultFormat: ResultFormat = ResultFormat.Table
 
   def setResultFormat(fmt: ResultFormat): Unit = { resultFormat = fmt }
 
@@ -96,7 +96,7 @@ class SqlEngine(val spark: SparkSession) {
     if (r.nonEmpty) s3Roots(bucket) = r else s3Roots.remove(bucket)
   }
 
-  private val s3Roots = scala.collection.mutable.Map[String, String]()
+  private val s3Roots = scala.collection.concurrent.TrieMap[String, String]()
 
   /** s3/s3a URL with the bucket's configured root prefix spliced in
     * (reference parity); other URLs go through the default rewrite. */

@@ -285,14 +285,15 @@ object BpeExprs {
 
   // ---------------------------------------------------------- Column API
   private def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("bpe_token_count",
-      { case Seq(t, m) => BpeTokenCount(t, m) }, "built-in")
-    reg.createOrReplaceTempFunction("bpe_tokens",
-      { case Seq(t, m) => BpeTokens(t, m) }, "built-in")
-    reg.createOrReplaceTempFunction("bpe_chunks_by_budget",
+    def register(name: String, builder: Seq[Expression] => Expression): Unit =
+      TextHashExprs.registerIfAbsent(spark, name, builder)
+    register("bpe_token_count",
+      { case Seq(t, m) => BpeTokenCount(t, m) })
+    register("bpe_tokens",
+      { case Seq(t, m) => BpeTokens(t, m) })
+    register("bpe_chunks_by_budget",
       { case Seq(t, m, Literal(b: Int, IntegerType)) =>
-        BpeChunksByBudget(t, m, b) }, "built-in")
+        BpeChunksByBudget(t, m, b) })
   }
 
   def bpeTokenCount(spark: SparkSession, text: Column, merges: Column): Column = {

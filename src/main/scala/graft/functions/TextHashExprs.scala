@@ -3,6 +3,7 @@ package graft.functions
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, TernaryExpression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -1231,55 +1232,66 @@ object TextHashExprs {
   // Session-registry-based construction (Column internals are private in
   // Spark 4; call_function resolves through the FunctionRegistry).
 
-  private def ensureRegistered(spark: SparkSession): Unit = {
+  /** Registers `name` in the session's function registry unless the
+    * session already has it, so a column builder called once per op
+    * registers each function once per session, not once per call. */
+  private[functions] def registerIfAbsent(spark: SparkSession, name: String,
+      builder: Seq[Expression] => Expression): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("token_trigram_hashes",
-      { case Seq(x) => TokenTrigramHashes(x) }, "built-in")
-    reg.createOrReplaceTempFunction("minhash_from_hashes",
-      { case Seq(x, Literal(n: Int, IntegerType)) => MinHashFromHashes(x, n) }, "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      { case Seq(x) => SimHash64(x) }, "built-in")
-    reg.createOrReplaceTempFunction("band_keys",
+    if (!reg.functionExists(FunctionIdentifier(name)))
+      reg.createOrReplaceTempFunction(name, builder, "built-in")
+  }
+
+  private def ensureRegistered(spark: SparkSession): Unit = {
+    def register(name: String, builder: Seq[Expression] => Expression): Unit =
+      registerIfAbsent(spark, name, builder)
+    register("token_trigram_hashes",
+      { case Seq(x) => TokenTrigramHashes(x) })
+    register("minhash_from_hashes",
+      { case Seq(x, Literal(n: Int, IntegerType)) => MinHashFromHashes(x, n) })
+    register("simhash64",
+      { case Seq(x) => SimHash64(x) })
+    register("band_keys",
       { case Seq(x, Literal(p: Int, IntegerType), Literal(b: Int, IntegerType)) =>
-        BandKeysExpr(x, p, b) }, "built-in")
-    reg.createOrReplaceTempFunction("rhp_buckets",
+        BandKeysExpr(x, p, b) })
+    register("rhp_buckets",
       { case Seq(x, Literal(t: Int, IntegerType), Literal(b: Int, IntegerType)) =>
-        RhpBuckets(x, t, b) }, "built-in")
-    reg.createOrReplaceTempFunction("nearest_centroids",
-      { case Seq(v, c, p) => NearestCentroids(v, c, p) }, "built-in")
-    reg.createOrReplaceTempFunction("cosine_sim",
-      { case Seq(a, b) => CosineSim(a, b) }, "built-in")
-    reg.createOrReplaceTempFunction("dot_prod",
-      { case Seq(a, b) => DotProd(a, b) }, "built-in")
-    reg.createOrReplaceTempFunction("vec_norm",
-      { case Seq(x) => VecNorm(x) }, "built-in")
-    reg.createOrReplaceTempFunction("vec_standardize",
-      { case Seq(x, m, d) => VecStandardize(x, m, d) }, "built-in")
-    reg.createOrReplaceTempFunction("deflate_ratio",
-      { case Seq(x) => DeflateRatio(x) }, "built-in")
-    reg.createOrReplaceTempFunction("text_metrics",
-      { case Seq(x) => TextMetrics(x) }, "built-in")
-    reg.createOrReplaceTempFunction("repetition_metrics",
-      { case Seq(x) => RepetitionMetrics(x) }, "built-in")
-    reg.createOrReplaceTempFunction("quant_stats",
-      { case Seq(x, Literal(l: Int, IntegerType)) => QuantStats(x, l) }, "built-in")
-    reg.createOrReplaceTempFunction("pair_terms",
-      { case Seq(x, Literal(d: Int, IntegerType)) => PairTerms(x, d) }, "built-in")
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      { case Seq(x) => NfcNormalize(x) }, "built-in")
-    reg.createOrReplaceTempFunction("char_entropy",
-      { case Seq(x) => CharEntropy(x) }, "built-in")
+        RhpBuckets(x, t, b) })
+    register("nearest_centroids",
+      { case Seq(v, c, p) => NearestCentroids(v, c, p) })
+    register("cosine_sim",
+      { case Seq(a, b) => CosineSim(a, b) })
+    register("dot_prod",
+      { case Seq(a, b) => DotProd(a, b) })
+    register("vec_norm",
+      { case Seq(x) => VecNorm(x) })
+    register("vec_standardize",
+      { case Seq(x, m, d) => VecStandardize(x, m, d) })
+    register("deflate_ratio",
+      { case Seq(x) => DeflateRatio(x) })
+    register("text_metrics",
+      { case Seq(x) => TextMetrics(x) })
+    register("repetition_metrics",
+      { case Seq(x) => RepetitionMetrics(x) })
+    register("quant_stats",
+      { case Seq(x, Literal(l: Int, IntegerType)) => QuantStats(x, l) })
+    register("pair_terms",
+      { case Seq(x, Literal(d: Int, IntegerType)) => PairTerms(x, d) })
+    register("nfc_normalize",
+      { case Seq(x) => NfcNormalize(x) })
+    register("char_entropy",
+      { case Seq(x) => CharEntropy(x) })
     // Spark's own runtime-filter bloom machinery, surfaced as callable
     // functions (both carry real doGenCode; the aggregate OR-merges
     // partial filters, so the build is fully distributed).
-    reg.createOrReplaceTempFunction("bloom_agg",
+    register("bloom_agg",
       { case Seq(x, Literal(n: Long, LongType)) =>
         new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(x, n).toAggregateExpression() }, "built-in")
-    reg.createOrReplaceTempFunction("bloom_might_contain",
+          .BloomFilterAggregate(x, n).toAggregateExpression() })
+    register("bloom_might_contain",
       { case Seq(bf, v) =>
         org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(bf, v) }, "built-in")
+          .BloomFilterMightContain(bf, v) })
   }
 
   def tokenTrigramHashes(spark: SparkSession, text: Column): Column = {

@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -277,9 +280,10 @@ object Dedup {
    * trailing `orderBy(keep_id)` would be a full range exchange over
    * every survivor, bought for nothing.
    *
-   * Scale: every iteration is one shuffle join of the PAIR set (bounded
-   * by actual duplicates, not corpus size) against the label table; the
-   * corpus itself is touched twice (signatures + final anti-join).
+   * Scale: every label-propagation round shuffles only rows of the PAIR
+   * set (bounded by actual duplicates, not corpus size; see
+   * [[connectedComponents]]); the corpus itself is touched twice
+   * (signatures + final anti-join).
    */
   def dedupCorpus(docs: DataFrame, minJaccard: Double = 0.9,
       maxIter: Int = 10, checkpointDir: Option[String] = None): DataFrame = {
@@ -351,88 +355,86 @@ object Dedup {
    * shared by [[dedupCorpus]] and `Similarity.semanticDedup`. Returns
    * `(doc_id, label)` for every pair MEMBER, where `label` is the
    * smallest doc_id in the member's component; docs in no pair are the
-   * caller's to handle (they are trivially their own components).
+   * caller's to handle (they are trivially their own components). Both
+   * columns keep the type of `doc_a`; a pair with a null end is no edge.
    *
-   * Scale: every iteration is one shuffle join of the PAIR set (bounded
-   * by actual duplicates, never corpus size) against the label table;
-   * dup clusters have tiny diameters, so a handful of rounds converges.
+   * Scale: the loop runs on RDDs, as GraphX's `ConnectedComponents`
+   * does. The symmetric edge set (bounded by actual duplicates, never
+   * corpus size) is hash-partitioned ONCE, and the label table shares
+   * its partitioner, so each round's edge-label join is narrow and the
+   * round's one shuffle carries the propagated neighbor labels to their
+   * owners. There is no checkpoint inside the loop: lineage is bounded
+   * by `maxIter` and recoverable from the persisted parents. Dup
+   * clusters have tiny diameters, so a handful of rounds converges.
    * The result is materialized (localCheckpoint) and every internal
    * persist is released before returning — repeated invocations leave
    * no executor-storage residue. Throws if `maxIter` rounds don't
    * converge (partial clusters would silently under-dedup).
    */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
-    // undirected edges both ways
+    val spark = pairs.sparkSession
+    val idType = pairs.schema("doc_a").dataType
+    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    // undirected edges both ways, (src, dst) keyed and placed by src
     val edges = pairs
-      .select(col("doc_a"), col("doc_b"))
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+      .select(col("doc_a").cast(LongType), col("doc_b").cast(LongType))
+      .na.drop()
+      .rdd
+      .flatMap { r =>
+        val (a, b) = (r.getLong(0), r.getLong(1))
+        Iterator((a, b), (b, a))
+      }
+      .partitionBy(part)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // labels over PAIR MEMBERS only — docs in no pair are trivially their
-    // own survivors and rejoin via the caller's final anti-join, which is
-    // what keeps every iteration bounded by the pair set, not the corpus
-    // (r04 review: corpus-wide labels made each round two corpus-scale
-    // joins, contradicting the scale contract above)
-    var pinned = edges.select(col("doc_a").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("label"))
+    // (doc, (label, previous label)) over PAIR MEMBERS only — docs in no
+    // pair are trivially their own survivors and rejoin via the caller's
+    // final anti-join, which keeps every round bounded by the pair set,
+    // not the corpus (r04 review). Members are the edge keys, so the
+    // labels inherit the edges' placement.
+    var labels: RDD[(Long, (Long, Long))] = edges
+      .mapPartitions(_.map(_._1).distinct.map(d => (d, (d, d))),
+        preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = pinned
     var converged = false
     var iter = 0
-    // graft.tools.CcProbe keeps a timed copy of this loop: change both
     while (!converged && iter < maxIter) {
-      // One aggregate per round, no label re-join (r12 optimization
-      // round, guide §2): the round's new label is min(own label,
-      // min neighbor label), so the own-label rows UNION the propagated
-      // neighbor rows and a single min-aggregate replaces the previous
-      // nbrMin-aggregate-plus-left-join shape — one pair-scale shuffle
-      // per round instead of an aggregate exchange AND a join. The
-      // convergence flag still rides in the same frame (the r05 rule:
-      // never a second pair-scale action per round): the own label is
-      // unique per doc_id, recovered as min(lbl WHERE own) inside the
-      // same aggregate, and __chg = new < own. Every label member
-      // appears as doc_a of ≥1 edge (labels ARE the doc_a set of the
-      // symmetric edge frame), so the own row always exists and __old
-      // is never null.
-      val prop = edges
-        .join(labels.select(col("doc_id").as("doc_b"), col("label").as("lbl")), "doc_b")
-        .select(col("doc_a").as("doc_id"), col("lbl"), lit(false).as("own"))
-      val joined = labels
-        .select(col("doc_id"), col("label").as("lbl"), lit(true).as("own"))
-        .unionByName(prop)
-        .groupBy(col("doc_id"))
-        .agg(min(col("lbl")).as("label"),
-          min(when(col("own"), col("lbl"))).as("__old"))
-        .select(col("doc_id"), col("label"),
-          (col("label") < col("__old")).as("__chg"))
-      // every 3rd round: cut lineage (localCheckpoint; lazy — the changed-
-      // count below materializes it) so straggler recompute depth stays
-      // bounded; otherwise a plain persist
-      val next =
-        if ((iter + 1) % 3 == 0) joined.localCheckpoint(eager = false)
-        else joined.persist(StorageLevel.MEMORY_AND_DISK)
-      // the round's one action. Only `changed == 0` is tested, so a plain
-      // count serves; no `limit(1)`: each LimitExec names its counter from
-      // a JVM-wide sequence, so a limit would make every round generate
-      // (and compile) new source instead of reusing the cached classes
-      val changed = next.filter(col("__chg")).count()
-      pinned.unpersist(blocking = false) // superseded — release each round
-      pinned = next
-      labels = next.select(col("doc_id"), col("label")) // served by the pin
+      // narrow: both sides share `part`; only `prop` is shuffled below
+      val prop = edges.join(labels).values
+        .map { case (dst, (lbl, _)) => (dst, lbl) }
+      // every member has its own row (it is an edge key), so the new
+      // label is min(own, min neighbor) and the old one is own
+      val next = labels.cogroup(prop, part)
+        .mapValues { case (own, nbrs) =>
+          val old = own.head._1
+          (nbrs.foldLeft(old)((a, b) => math.min(a, b)), old)
+        }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // the round's one action: materializes `next` and tests convergence
+      val changed = next.filter { case (_, (lbl, old)) => lbl < old }.count()
+      labels.unpersist(blocking = false) // superseded — release each round
+      labels = next
       converged = changed == 0
       iter += 1
     }
     if (!converged) {
-      // release the pinned frames BEFORE throwing (retry hygiene)
-      pinned.unpersist(blocking = false)
+      // release the pins BEFORE throwing (retry hygiene)
+      labels.unpersist(blocking = false)
       edges.unpersist(blocking = false)
       throw new IllegalStateException(
         s"connectedComponents: label propagation did not converge within $maxIter " +
         "iterations — clusters would be silently partial; raise maxIter")
     }
     // hand back a materialized frame so no internal pin outlives the call
-    val out = labels.localCheckpoint()
-    pinned.unpersist(blocking = false)
+    val rows = labels.map { case (d, (lbl, _)) => Row(d, lbl) }
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("label", LongType, nullable = false)))
+    val out = spark.createDataFrame(rows, schema)
+      .select(col("doc_id").cast(idType).as("doc_id"),
+        col("label").cast(idType).as("label"))
+      .localCheckpoint()
+    labels.unpersist(blocking = false)
     edges.unpersist(blocking = false)
     out
   }

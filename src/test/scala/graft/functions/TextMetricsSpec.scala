@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
@@ -95,5 +96,27 @@ class TextMetricsSpec extends AnyFunSuite {
     assert(out(2L)._1 == "en", out(2L).toString)
     assert(out(3L)._1 == "und" && out(3L)._2 == 0.0, out(3L).toString)
     assert(out(4L)._1 == "und", out(4L).toString)
+  }
+
+  test("custom functions register once per session, not once per builder call") {
+    val s = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    for ((name, build) <- Seq[(String, () => Unit)](
+        "char_entropy" -> (() => TextHashExprs.charEntropy(s, lit("x"))),
+        "bpe_token_count" -> (() => BpeExprs.bpeTokenCount(s, lit("x"), lit(null)))))
+    {
+      // each registration stores a new ExpressionInfo next to the builder;
+      // the builders themselves are non-capturing lambdas, one instance
+      // per call site, so they compare equal even when re-registered
+      def entry() = (reg.lookupFunction(FunctionIdentifier(name)),
+        reg.lookupFunctionBuilder(FunctionIdentifier(name)))
+      build()
+      val (info1, builder1) = entry()
+      build()
+      val (info2, builder2) = entry()
+      assert(info1.isDefined && builder1.isDefined, name)
+      assert((info1.get eq info2.get) && (builder1.get eq builder2.get),
+        s"$name was registered again")
+    }
   }
 }
