@@ -3,6 +3,11 @@ package graft.engine
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeMap, GenericInternalRow,
+  InterpretedOrdering, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types._
 
 /** Result encodings of the reference API (reference:
@@ -28,9 +33,15 @@ object ResultFormat {
  *    preserved.
  *
  * The formatter is the ONLY driver-side materialization point in the
- * engine, exactly like the reference's `collect` → format step; every
- * upstream operator stays distributed. Callers that need bounded output
- * should LIMIT — same contract as the reference.
+ * engine, exactly like the reference's `collect` → format step; a root
+ * ORDER BY without LIMIT is applied to the collected rows. The collect
+ * holds every row on the driver anyway, and Spark would plan that sort
+ * as a range shuffle: a job that samples the input to pick partition
+ * bounds, a shuffle stage, and partitions gathered straight back into one
+ * array (the reference sorts inside its single partition,
+ * `target_partitions=1`). Everything below that sort stays distributed.
+ * Callers that need bounded output should LIMIT — same contract as the
+ * reference.
  */
 object Formatter {
 
@@ -42,7 +53,7 @@ object Formatter {
   // ------------------------------------------------------------- table
   def table(df: DataFrame): String = {
     val schema = df.schema
-    val rows = df.collect()
+    val rows = collect(df)
     if (schema.isEmpty) return "++\n++"
     val headers = schema.fields.map(_.name)
     val cells = rows.map(r => schema.fields.indices.map(i => render(r, i, schema.fields(i).dataType)).toArray)
@@ -64,13 +75,63 @@ object Formatter {
   // ------------------------------------------------------------- json
   def json(df: DataFrame): String = {
     val schema = df.schema
-    val rows = df.collect()
+    val rows = collect(df)
     rows.map { r =>
       schema.fields.indices.flatMap { i =>
         if (r.isNullAt(i)) None // ArrayWriter omits null fields
         else Some("\"" + escape(schema.fields(i).name) + "\":" + jsonValue(r.get(i), schema.fields(i).dataType))
       }.mkString("{", ",", "}")
     }.mkString("[", ",", "]")
+  }
+
+  // ------------------------------------------------------------- rows
+  /** The rows of `df` in its order. When [[sortedRoot]] finds a Sort,
+    * Spark runs the Sort's input and the rows are ordered here with
+    * Catalyst's own `InterpretedOrdering`: the `SortOrder` semantics
+    * `SortExec` runs (direction, null order, NaN, collation). A key that
+    * is not an input column is computed by Spark as one more column, so
+    * no key expression is evaluated on the driver. */
+  private def collect(df: DataFrame): Array[Row] = sortedRoot(df.queryExecution.analyzed) match {
+    case Some((columns, Sort(order, _, child, _))) =>
+      val computed = order.map(o => o.child match {
+        case a: Attribute if child.outputSet.contains(a) => None
+        case key => Some(Alias(key, "sort_key")())
+      })
+      val input = if (computed.flatten.isEmpty) child else Project(child.output ++ computed.flatten, child)
+      val ordering = order.zip(computed).map { case (o, c) => c.fold(o)(a => o.copy(child = a.toAttribute)) }
+      val keys = ordering.map(_.child.asInstanceOf[Attribute])
+      def position(a: Attribute) = input.output.indexWhere(_.exprId == a.exprId)
+      val keyColumns = keys.map(a => (position(a), CatalystTypeConverters.createToCatalystConverter(a.dataType)))
+      val sorted = PlanBridge.ofRows(df.sparkSession, input).collect()
+        .map(r => (new GenericInternalRow(keyColumns.map { case (i, c) => c(r.get(i)) }.toArray): InternalRow, r))
+        .sortBy(_._1)(new InterpretedOrdering(ordering, keys))
+        .map(_._2)
+      val picked = columns.map(position)
+      if (picked == input.output.indices) sorted else sorted.map(r => Row.fromSeq(picked.map(r.get)))
+    case None => df.collect()
+  }
+
+  /** A root ORDER BY without LIMIT: the global Sort `plan` sits on
+    * through Projects whose entries are columns or renamed columns, with
+    * the root's columns as the Sort's output attributes. A
+    * nondeterministic key (the analyzer moves `ORDER BY rand()` into a
+    * Project below the Sort, hence the check on the whole input) or a
+    * subquery key keeps Spark's plan, and so does every other root:
+    * LIMIT, OFFSET, a WITH statement. */
+  private[engine] def sortedRoot(plan: LogicalPlan): Option[(Seq[Attribute], Sort)] = plan match {
+    case s @ Sort(order, true, child, _)
+        if child.deterministic && order.forall(o => o.deterministic && !SubqueryExpression.hasSubquery(o)) =>
+      Some((s.output, s))
+    case Project(list, child) => sortedRoot(child).flatMap { case (columns, s) =>
+      val below = AttributeMap(child.output.zip(columns))
+      val picked = list.map {
+        case a: Attribute => below.get(a)
+        case Alias(a: Attribute, _) => below.get(a)
+        case _ => None
+      }
+      if (picked.forall(_.isDefined)) Some((picked.flatten, s)) else None
+    }
+    case _ => None
   }
 
   // ------------------------------------------------------------- cells

@@ -216,8 +216,12 @@ object SqlEngine {
 
   /** Session factory mirroring `DataFusionContext::new()` defaults the
     * engine relies on (UTC session, ANSI on, AQE on), plus the
-    * [[jvmDefaults]]. */
+    * [[jvmDefaults]]. Always a new session, on the running SparkContext
+    * if there is one: `getOrCreate` would hand back a caller's active
+    * session with these confs written over its own. The caller's active
+    * and default sessions stay what they were. */
   def newSession(master: String = "local[*]"): SqlEngine = {
+    val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
     val spark = jvmDefaults(SparkSession.builder())
       .master(master)
       .appName("graft-sql-engine")
@@ -226,7 +230,9 @@ object SqlEngine {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .create()
+    active.foreach(SparkSession.setActiveSession)
+    default.foreach(SparkSession.setDefaultSession)
     new SqlEngine(spark)
   }
 }

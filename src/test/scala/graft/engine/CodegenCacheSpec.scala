@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkEntry, TestSessions}
@@ -24,16 +23,8 @@ class CodegenCacheSpec extends AnyFunSuite {
   }
 
   test("newSession's context carries the JVM-wide defaults") {
-    // newSession on a thread with an active session would hand back the
-    // shared test session with its runtime confs overwritten; clear it so
-    // newSession builds a fresh session on the running context, as a
-    // second engine in the process would, then restore it
-    val shared = spark
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val fresh = try SqlEngine.newSession("local[4]").spark finally {
-      SparkSession.setDefaultSession(shared); SparkSession.setActiveSession(shared)
-    }
-    assert(fresh ne shared)
+    val fresh = SqlEngine.newSession("local[4]").spark
+    assert(fresh ne spark)
     val expected = Map(
       "spark.sql.codegen.cache.maxEntries" -> SqlEngine.CodegenCacheEntries,
       "spark.sql.ui.retainedExecutions" -> SqlEngine.RetainedStatus,

@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSessions
@@ -7,6 +8,17 @@ import graft.TestSessions
 class SqlEngineSpec extends AnyFunSuite {
   private lazy val spark = TestSessions.spark
   private lazy val engine = new SqlEngine(spark)
+
+  test("newSession builds its own session and leaves the caller's as it was") {
+    SparkSession.setActiveSession(spark)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    val fresh = SqlEngine.newSession("local[4]").spark
+    assert(fresh ne spark)
+    assert(fresh.conf.get("spark.sql.shuffle.partitions") == "32")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(SparkSession.getActiveSession.contains(spark))
+    assert(SparkSession.getDefaultSession.contains(spark))
+  }
 
   test("greet is wired") {
     assert(SqlEngine.greet() == "hello from graft-spark")

@@ -1,7 +1,6 @@
 package graft.tables
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
@@ -9,7 +8,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
@@ -31,25 +29,8 @@ class TablesSpec extends AnyFunSuite {
 
   test("registerAll on a fresh session starts no Spark job") {
     val s = spark.newSession()
-    val reference = "tables-spec-reference"
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(js.properties.getProperty("spark.jobGroup.id")))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Tables.registerAll(s, TestSessions.sf001)
-      // one inference read, tagged, closes the count: the listener bus is
-      // ordered, so once its job is seen every earlier job has been too
-      spark.sparkContext.setJobGroup(reference, "reference schema inference")
-      try s.read.parquet(s"${TestSessions.sf001}/nation.parquet").schema
-      finally spark.sparkContext.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains(reference) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(groups.asScala.toSeq == Seq(reference),
-        s"registerAll started ${groups.size - 1} job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = TestSessions.jobsOf(s)(Tables.registerAll(s, TestSessions.sf001))
+    assert(jobs == 0, s"registerAll started $jobs job(s)")
   }
 
   test("footer schema equals the inferred one for every fixture table") {
