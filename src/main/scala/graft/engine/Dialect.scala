@@ -1217,8 +1217,8 @@ object Dialect {
 
   /** Apply `f` only to the segments of `sql` OUTSIDE string literals,
     * quoted identifiers and comments (the same regions `maskSameLength`
-    * masks) — textual rewrites like the information_schema one must
-    * never rewrite data inside them. */
+    * masks) — textual rewrites like the information_schema case fold
+    * must never rewrite data inside them. */
   def outsideLiterals(sql: String)(f: String => String): String = {
     val masked = maskSameLength(sql)
     val sb = new StringBuilder

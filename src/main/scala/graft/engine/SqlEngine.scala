@@ -30,6 +30,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *  - Spill stays enabled (reference disables its disk manager,
  *    `src/core.rs:55`, because WASM has no disk) — a strict superset.
  *
+ * Session setting: `new SqlEngine(spark)` sets
+ * `spark.sql.catalog.information_schema` on the caller's session, which
+ * registers [[InfoSchema]] as a catalog there (plain `spark.sql` sees it
+ * too), and `information_schema.df_settings` lists that one extra row.
+ * The GapFillers functions are registered into the session's function
+ * registry once; a second engine on the same session finds them in place.
+ *
  * JVM-wide defaults ([[SqlEngine.jvmDefaults]], applied by `newSession`):
  *  - `spark.sql.codegen.cache.maxEntries` = [[SqlEngine.CodegenCacheEntries]].
  *    Spark caches generated classes per (class loader, source) in one
@@ -51,6 +58,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 class SqlEngine(val spark: SparkSession) {
 
   graft.functions.GapFillers.register(spark)
+
+  // information_schema.{tables,views,columns,df_settings} resolve through
+  // this read-only catalog (reference: `with_information_schema(true)`,
+  // src/core.rs:62)
+  spark.conf.set(s"spark.sql.catalog.${InfoSchema.Name}", classOf[InfoSchema].getName)
 
   // http(s) parquet/CSV/JSON scans — reference resolves these URL schemes
   // in its object store (src/object_store.rs:57-71)
@@ -132,7 +144,7 @@ class SqlEngine(val spark: SparkSession) {
     // restructured text.
     // SIMILAR TO locates the keyword on a same-length literal mask (its
     // pattern IS a literal, but the keyword must sit outside one); the
-    // info-schema rewrite applies only outside string literals.
+    // information_schema case fold applies only outside string literals.
     // the resolver lets the GROUPS rewrite PROVE an expression subquery
     // uncorrelated (r06): a body that fully analyzes standalone (catalog
     // + temp views, no outer scope) cannot reference an outer row, so
@@ -143,12 +155,8 @@ class SqlEngine(val spark: SparkSession) {
       Dialect.rewriteGroupsFrames(stmt))
     val sparkText = Dialect.rewriteAggFirstLast(
       Dialect.rewriteGenerateSeries(Dialect.rewriteSimilarTo(groupsRewritten)))
-    val translated = DdlTranslator.translate(sparkText, rewriteS3Url)
-    val rewritten =
-      if (InfoSchema.mentionsInfoSchema(Dialect.maskLiterals(translated))) {
-        InfoSchema.refresh(spark)
-        Dialect.outsideLiterals(translated)(InfoSchema.rewrite)
-      } else translated
+    val translated = Dialect.outsideLiterals(
+      DdlTranslator.translate(sparkText, rewriteS3Url))(InfoSchema.foldPrefix)
     // One spark.sql per statement: it parses and analyzes the text, and
     // runs a command (DDL/DML) eagerly, exactly once. DataFusion's
     // function spellings (`to_hex`, `approx_distinct`, ...) resolve here
@@ -168,7 +176,7 @@ class SqlEngine(val spark: SparkSession) {
     // (grouping/value columns only, memoized per plan shape, and
     // skipped entirely when catalog/CBO statistics answer the
     // cardinality question and pick the default mode, r06).
-    val sparkDf = spark.sql(rewritten)
+    val sparkDf = spark.sql(translated)
     val df = PercentilePlanner.rewrite(spark, sparkDf).getOrElse(sparkDf)
     // hive-style partition discovery parity: the reference's listing
     // tables see partition dirs immediately; Spark catalog tables must

@@ -310,10 +310,18 @@ object GapFillers {
 
   // ------------------------------------------------------------ registry
 
+  /** Registers each function into the session's registry once: a name
+    * is (re)bound only while the session lacks it or still holds Spark's
+    * own builder for it — `version`, `to_char`, `encode` and `decode`
+    * override builtins, so "exists" alone would leave those unbound. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    def f(name: String)(b: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, b, "built-in")
+    def f(name: String)(b: Seq[Expression] => Expression): Unit = {
+      val id = FunctionIdentifier(name)
+      val held = reg.lookupFunctionBuilder(id)
+      if (held.isEmpty || held == FunctionRegistry.builtin.lookupFunctionBuilder(id))
+        reg.createOrReplaceTempFunction(name, b, "built-in")
+    }
 
     f("gcd") { case Seq(a, b) => Gcd(Cast(a, LongType), Cast(b, LongType)) }
     f("lcm") { case Seq(a, b) => Lcm(Cast(a, LongType), Cast(b, LongType)) }

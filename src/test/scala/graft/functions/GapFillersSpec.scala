@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSessions
@@ -207,5 +209,19 @@ class GapFillersSpec extends AnyFunSuite {
       assert(ours.columns.toSeq == target.columns.toSeq, call)
       assert(ours.collect().toSeq == target.collect().toSeq, call)
     }
+  }
+
+  test("a second engine on a session registers nothing again; builtin overrides stay bound") {
+    val s = TestSessions.spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    new SqlEngine(s)
+    val encode = FunctionIdentifier("encode")
+    assert(!reg.lookupFunction(encode).exists(
+      _ eq FunctionRegistry.builtin.lookupFunction(encode).get), "encode still holds Spark's entry")
+    val before = reg.listFunction().map(id => id -> reg.lookupFunction(id).get).toMap
+    new SqlEngine(s)
+    val replaced = reg.listFunction().filterNot(id => before.get(id).exists(_ eq reg.lookupFunction(id).get))
+    assert(replaced.isEmpty, s"registered again: ${replaced.mkString(", ")}")
+    assert(s.sql("SELECT encode('a', 'hex')").head().getString(0) == "61")
   }
 }
