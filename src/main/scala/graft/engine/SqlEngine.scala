@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
 /**
  * The engine façade — a Spark-native replica of the reference's complete
@@ -35,7 +35,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * registers [[InfoSchema]] as a catalog there (plain `spark.sql` sees it
  * too), and `information_schema.df_settings` lists that one extra row.
  * The GapFillers functions are registered into the session's function
- * registry once; a second engine on the same session finds them in place.
+ * registry once. [[GroupsFrames]] adds one optimizer rule to
+ * `spark.experimental.extraOptimizations` and one internal function,
+ * `__graft_groups`, to the registry, also once. A second engine on the
+ * same session finds all of them in place.
  *
  * JVM-wide defaults ([[SqlEngine.jvmDefaults]], applied by `newSession`):
  *  - `spark.sql.codegen.cache.maxEntries` = [[SqlEngine.CodegenCacheEntries]].
@@ -58,6 +61,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 class SqlEngine(val spark: SparkSession) {
 
   graft.functions.GapFillers.register(spark)
+  GroupsFrames.register(spark)
 
   // information_schema.{tables,views,columns,df_settings} resolve through
   // this read-only catalog (reference: `with_information_schema(true)`,
@@ -138,23 +142,13 @@ class SqlEngine(val spark: SparkSession) {
     if ("""(?i)\bcurrent_time\s*\(""".r.findFirstIn(masked).isDefined)
       throw new UnsupportedOperationException(
         "current_time()/TIME type is not supported (Spark has no TIME type; see README non-goals)")
-    // GROUPS frames: dense_rank-keyed RANGE restructure for the common
-    // shape; unsupported shapes raise the documented clean error inside
-    // the rewrite. Runs first — the other rewrites then see the
-    // restructured text.
+    // GROUPS frames become marked ROWS frames that the GroupsFrames
+    // optimizer rule turns into RANGE frames over a dense_rank.
     // SIMILAR TO locates the keyword on a same-length literal mask (its
     // pattern IS a literal, but the keyword must sit outside one); the
     // information_schema case fold applies only outside string literals.
-    // the resolver lets the GROUPS rewrite PROVE an expression subquery
-    // uncorrelated (r06): a body that fully analyzes standalone (catalog
-    // + temp views, no outer scope) cannot reference an outer row, so
-    // lifting it into a CTE is sound. spark.sql on SELECT text analyzes
-    // lazily-created plans without executing anything.
-    val groupsRewritten = Dialect.withResolver(
-      s => scala.util.Try(spark.sql(s)).isSuccess)(
-      Dialect.rewriteGroupsFrames(stmt))
-    val sparkText = Dialect.rewriteAggFirstLast(
-      Dialect.rewriteGenerateSeries(Dialect.rewriteSimilarTo(groupsRewritten)))
+    val sparkText = Dialect.rewriteAggFirstLast(Dialect.rewriteGenerateSeries(
+      Dialect.rewriteSimilarTo(Dialect.markGroupsFrames(stmt))))
     val translated = Dialect.outsideLiterals(
       DdlTranslator.translate(sparkText, rewriteS3Url))(InfoSchema.foldPrefix)
     // One spark.sql per statement: it parses and analyzes the text, and
@@ -176,7 +170,14 @@ class SqlEngine(val spark: SparkSession) {
     // (grouping/value columns only, memoized per plan shape, and
     // skipped entirely when catalog/CBO statistics answer the
     // cardinality question and pick the default mode, r06).
-    val sparkDf = spark.sql(translated)
+    val sparkDf = try spark.sql(translated) catch {
+      // the GROUPS marker is a session function, which a permanent view
+      // may not reference
+      case e: AnalysisException if e.getCondition == "INVALID_TEMP_OBJ_REFERENCE" &&
+          e.getMessage.contains(GroupsFrames.Marker) =>
+        GroupsFrames.unsupported("a permanent view cannot hold a GROUPS frame; " +
+          "use a temporary view")
+    }
     val df = PercentilePlanner.rewrite(spark, sparkDf).getOrElse(sparkDf)
     // hive-style partition discovery parity: the reference's listing
     // tables see partition dirs immediately; Spark catalog tables must
@@ -190,10 +191,15 @@ class SqlEngine(val spark: SparkSession) {
       }
     }
     // header parity: Spark names an unaliased COUNT(*) column "count(1)";
-    // the reference engine prints "count(*)" (SURVEY §7.5 watch item)
-    if ("""(?i)count\s*\(\s*\*\s*\)""".r.findFirstIn(masked).isDefined &&
-        df.columns.contains("count(1)")) {
-      df.toDF(df.columns.map(c => if (c == "count(1)") "count(*)" else c).toIndexedSeq: _*)
+    // the reference engine prints "count(*)" (SURVEY §7.5 watch item).
+    // An unaliased GROUPS window column is named after its marked text.
+    val countStar = """(?i)count\s*\(\s*\*\s*\)""".r.findFirstIn(masked).isDefined
+    val marked = sparkText.contains(GroupsFrames.Marker)
+    if (countStar || marked) {
+      val names = df.columns.map { c =>
+        if (countStar && c == "count(1)") "count(*)" else if (marked) GroupsFrames.header(c) else c
+      }
+      if (names.sameElements(df.columns)) df else df.toDF(names.toIndexedSeq: _*)
     } else df
   }
 }

@@ -28,9 +28,11 @@ import org.apache.spark.unsafe.types.UTF8String
  *     `string_agg` needs no entry: Spark ships it.
  *
  * Known non-goals (documented, matching SURVEY §7.5): `current_time` /
- * the TIME type (Spark has none). GROUPS window frames are emulated at
- * the dialect layer (`Dialect.rewriteGroupsFrames`); `to_local_time` is
- * shimmed below onto `from_utc_timestamp` with the session zone.
+ * the TIME type (Spark has none). GROUPS window frames are a token mark
+ * (`Dialect.markGroupsFrames`) plus an optimizer rule
+ * (`graft.engine.GroupsFrames`, which registers its own marker
+ * function); `to_local_time` is shimmed below onto `from_utc_timestamp`
+ * with the session zone.
  */
 object GapFillers {
 

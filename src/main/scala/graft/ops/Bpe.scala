@@ -27,7 +27,7 @@ import graft.functions.BpeExprs
  *
  * Scale: the merge table rides as one foldable literal into a per-row
  * imperative expression — no shuffle, no join, no driver round-trip.
- * MEASURED at real table scale (graft.tools.BpeProbe, r10 — NOTES.md):
+ * MEASURED at real table scale (NOTES.md, "BPE at real merge-table scale"):
  * a 50,000-merge table is ~177 KiB of literal pair bytes in the
  * serialized expression tree and ~6.9 MiB of per-thread rank map once
  * built (the IVF-centroid transport class, as claimed), encodes the
@@ -97,11 +97,11 @@ object Bpe {
     * exactly one (left, right, count) row per round. Cost is
     * O(k · vocab · avg symbols), independent of corpus size after the
     * first pass — but ONE SPARK JOB PER MERGE (measured 1.44 s/round
-    * on a 116k-word vocab, BpeProbe r10), so this loop is for modest
+    * on a 116k-word vocab, NOTES.md r10), so this loop is for modest
     * k (domain vocabularies, planted oracles); for the production
     * ~50k-merge regime use [[learnMergesLocal]] — identical semantics
     * and sequence, delta-update loop, measured 0.3 ms/merge amortized
-    * on a 116k-word vocab (BpeProbe r11). */
+    * on a 116k-word vocab (NOTES.md, Round 11 status). */
   def learnMerges(corpus: DataFrame, k: Int, minFrequency: Long = 2,
       textCol: String = "text"): Seq[(String, String)] = {
     require(k >= 0, s"k must be >= 0, got $k")
@@ -155,7 +155,7 @@ object Bpe {
     * the planted corpus AND on real fixture text. `maxVocab` is the
     * one approximation knob (dropping singleton-tail words barely
     * moves pair counts); pass `Int.MaxValue` for exactness. Driver
-    * memory at the 2^20 default cap is MEASURED (BpeProbe r11): 423 MiB
+    * memory at the 2^20 default cap is MEASURED (NOTES.md r11): 423 MiB
     * of initial words+pairCount+postings+candidate state, k=50000 loop
     * in ~69 s — well inside an 8 GB driver. */
   def learnMergesLocal(corpus: DataFrame, k: Int, minFrequency: Long = 2,
@@ -191,7 +191,7 @@ object Bpe {
     // capacity is the max word index it ever holds, and the merge loop
     // mints thousands of few-member pairs — at the 2^20 default cap
     // that allocated ~128 KiB per pair and OOM'd an 8 GB driver
-    // (BpeProbe caught it); HashSet memory follows membership, which
+    // (NOTES.md r11); HashSet memory follows membership, which
     // only shrinks as merges localize. Update order over postings is
     // commutative (each touched word re-encodes independently and count
     // deltas add), so the learned sequence is unchanged — BpeSpec's

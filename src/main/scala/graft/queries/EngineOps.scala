@@ -124,8 +124,9 @@ object EngineOps {
 
   // ---------------------------------------------------------------- q59
   // GROUPS window frames (SURVEY §2.5 gap: the reference's planner
-  // accepts them, Spark has no GROUPS mode). Executed through the
-  // dense_rank-keyed RANGE rewrite (`Dialect.rewriteGroupsFrames`).
+  // accepts them, Spark has no GROUPS mode). `Dialect.markGroupsFrames`
+  // marks the frame and the `GroupsFrames` optimizer rule runs it as a
+  // RANGE frame over the dense_rank of the window ordering.
   // DuckDB does NOT implement GROUPS either ("not implemented yet"), so
   // the oracle derives the same frame independently: pre-aggregate each
   // peer group, window over the per-group rows, join back per row.
@@ -277,9 +278,8 @@ object EngineOps {
   }
 
   // ---------------------------------------------------------------- q64
-  // GROUPS frames inside a named WINDOW clause (r04: definitions are
-  // inlined into their OVER references before the restructure; r03
-  // raised a documented error). Oracle: q63's per-peer-group derivation
+  // GROUPS frames inside a named WINDOW clause (definitions are inlined
+  // into their OVER references before marking). Oracle: q63's per-peer-group derivation
   // with the 1 PRECEDING..1 FOLLOWING frame.
   private val groupsNamedWindowSql =
     """SELECT CAST(o_orderkey AS BIGINT) AS o_orderkey,
@@ -311,9 +311,8 @@ object EngineOps {
   }
 
   // ---------------------------------------------------------------- q65
-  // GROUPS frames over a grouped query (r04: dense_rank computes inside
-  // the aggregate, GROUPS windows become RANGE-over-__grp outside; r03
-  // raised a documented error). The window orders by YEAR so peer
+  // GROUPS frames over a grouped query: the GroupsFrames rule rewrites
+  // the Window above the Aggregate. The window orders by YEAR so peer
   // groups span many aggregated rows — true GROUPS, not ROWS. MAX keeps
   // the double column order-insensitive; the running count is exact
   // BIGINT arithmetic.
@@ -376,12 +375,11 @@ object EngineOps {
   }
 
   // ---------------------------------------------------------------- q67
-  // GROUPS window inside a `(SELECT …)` DERIVED TABLE — the r04
-  // documented error, now auto-lifted into a CTE (VERDICT r04 next #3).
-  // The derived table computes the GROUPS rolling sum per order-date
-  // peer group; the outer query filters and re-projects it — exercising
-  // the lift + the enclosing scope's references to the lifted name. The
-  // oracle derives the frame per peer group exactly as q59 does (DuckDB
+  // GROUPS window inside a `(SELECT …)` DERIVED TABLE. The derived
+  // table computes the GROUPS rolling sum per order-date peer group; the
+  // outer query filters and re-projects it, so the rule rewrites a
+  // Window below the outer scope's filter. The oracle derives the frame
+  // per peer group exactly as q59 does (DuckDB
   // has no GROUPS mode either).
   private val groupsSubquerySql =
     """SELECT CAST(d.o_orderkey AS BIGINT) AS o_orderkey, d.grp_sum
@@ -414,9 +412,8 @@ object EngineOps {
   }
 
   // ---------------------------------------------------------------- q71
-  // GROUPS window inside an IN subquery (VERDICT r05 next #3 — the r05
-  // documented error for expression subqueries, now auto-lifted when the
-  // body PROVABLY resolves standalone, i.e. cannot be correlated). The
+  // GROUPS window inside an IN subquery: the rule rewrites Windows
+  // inside subquery plans too. The
   // IN-list is the set of running peer-group counts over orders; rows
   // whose custkey appears in that set survive. Deterministic: the SET of
   // counts is well-defined regardless of intra-peer-group order. The

@@ -266,8 +266,8 @@ object EventStream {
     * state store on every micro-batch, so per-batch overhead scales
     * with the shuffle-partition count — at local[32] the stream-stream
     * join replay spends ~7 s in 128 store commits for ~2k state rows.
-    * The cap default is 4 (r11 optimization round, measured by
-    * `graft.tools.StreamProbe` on the x94 left-outer replay, 3 rounds
+    * The cap default is 4 (OPTIMIZATION_r11.md §5, measured on the
+    * x94 left-outer replay, 3 rounds
     * per config in BOTH warmup orders to cancel JIT bias: descending
     * order read 8/4/2 ≈ 15.1–19.6 / 8.5–13.9 / 7.9–9.6 s, ascending
     * read 2/4/8 ≈ 5.7–8.0 / 6.5–8.2 / 7.1–27.3 s — 2 and 4 are within

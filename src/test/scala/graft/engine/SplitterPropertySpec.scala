@@ -71,7 +71,7 @@ class SplitterPropertySpec extends AnyFunSuite {
       val sql = s"SELECT '$w $frag' AS doc, $w() AS k"
       val rewritten = Dialect.rewriteAggFirstLast(
         Dialect.rewriteGenerateSeries(Dialect.rewriteSimilarTo(
-          Dialect.rewriteGroupsFrames(sql))))
+          Dialect.markGroupsFrames(sql))))
       assert(rewritten == sql, s"input: $sql")
     }
   }

@@ -9,6 +9,10 @@ class SqlEngineSpec extends AnyFunSuite {
   private lazy val spark = TestSessions.spark
   private lazy val engine = new SqlEngine(spark)
 
+  /** A statement's rows as plain values, in the order it returns them. */
+  private def rows(sql: String): Seq[Seq[Any]] =
+    engine.executeStatement(sql).collect().toSeq.map(_.toSeq)
+
   test("newSession builds its own session and leaves the caller's as it was") {
     SparkSession.setActiveSession(spark)
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
@@ -512,16 +516,13 @@ class SqlEngineSpec extends AnyFunSuite {
           |  SELECT * FROM inner_cte)
           |SELECT * FROM outer_cte ORDER BY x""".stripMargin) ==
         """[{"x":4,"s":8},{"x":4,"s":8}]""")
-      // unsupported shapes inside a CTE body still raise the documented
-      // error, not a Spark parse error
-      val err = intercept[UnsupportedOperationException] {
-        engine.executeSql(
-          """WITH w AS (
-            |  SELECT p || 'x', sum(sum(x)) OVER (ORDER BY p GROUPS CURRENT ROW) AS s
-            |  FROM VALUES ('a', 1) t(p, x) GROUP BY p)
-            |SELECT * FROM w""".stripMargin)
-      }
-      assert(err.getMessage.contains("GROUPS window frames"))
+      // an unaliased expression item with GROUP BY inside a CTE body: one
+      // group ('a', sum 1) is its own peer group
+      assert(rows(
+        """WITH w AS (
+          |  SELECT p || 'x', sum(sum(x)) OVER (ORDER BY p GROUPS CURRENT ROW) AS s
+          |  FROM VALUES ('a', 1) t(p, x) GROUP BY p)
+          |SELECT * FROM w""".stripMargin) == Seq(Seq("ax", 1L)))
     } finally engine.setResultFormat(ResultFormat.Table)
   }
 
@@ -725,20 +726,14 @@ class SqlEngineSpec extends AnyFunSuite {
           |GROUP BY p, o HAVING sum(x) > 1 ORDER BY p, o""".stripMargin) ==
         """[{"p":1,"o":1,"s":10},{"p":1,"o":2,"s":20,"prev_s":10},""" +
         """{"p":2,"o":4,"s":5},{"p":2,"o":5,"s":7,"prev_s":5}]""")
-      // unaliased GROUPS window with GROUP BY keeps a clean documented error
-      val e = intercept[UnsupportedOperationException] {
-        engine.executeSql(
-          """SELECT o, sum(sum(x)) OVER (ORDER BY o GROUPS CURRENT ROW)
-            |FROM VALUES (1, 1) t(o, x) GROUP BY o""".stripMargin)
-      }
-      assert(e.getMessage.contains("alias"))
-      // and so does an unaliased non-trivial item
-      val e2 = intercept[UnsupportedOperationException] {
-        engine.executeSql(
-          """SELECT o + 1, sum(sum(x)) OVER (ORDER BY o GROUPS CURRENT ROW) AS gs
-            |FROM VALUES (1, 1) t(o, x) GROUP BY o""".stripMargin)
-      }
-      assert(e2.getMessage.contains("AS alias"))
+      // an unaliased GROUPS window with GROUP BY: one group, sum 1
+      assert(rows(
+        """SELECT o, sum(sum(x)) OVER (ORDER BY o GROUPS CURRENT ROW)
+          |FROM VALUES (1, 1) t(o, x) GROUP BY o""".stripMargin) == Seq(Seq(1, 1L)))
+      // and an unaliased expression item: o + 1 = 2
+      assert(rows(
+        """SELECT o + 1, sum(sum(x)) OVER (ORDER BY o GROUPS CURRENT ROW) AS gs
+          |FROM VALUES (1, 1) t(o, x) GROUP BY o""".stripMargin) == Seq(Seq(2, 1L)))
     } finally engine.setResultFormat(ResultFormat.Table)
   }
 
@@ -819,14 +814,13 @@ class SqlEngineSpec extends AnyFunSuite {
           |FROM VALUES (1), (2) t(x) ORDER BY x""".stripMargin) ==
         """[{"x":1,"nxt":2},{"x":2}]""") // JSON format omits nulls (arrow parity)
     } finally engine.setResultFormat(ResultFormat.Table)
-    // a GROUPS window inside a scalar subquery raises the documented
-    // error (the restructure would splice __grp across scopes)
-    val e = intercept[UnsupportedOperationException] {
-      engine.executeSql(
-        """SELECT (SELECT max(sum(y) OVER (ORDER BY y GROUPS CURRENT ROW)) FROM VALUES (1) u(y)) AS sub
-          |FROM VALUES (1) t(x)""".stripMargin)
-    }
-    assert(e.getMessage.contains("subqueries"), e.getMessage)
+    // a GROUPS window inside a scalar subquery: the peer group {1, 1}
+    // sums to 2 (a window may not sit inside an aggregate, so the
+    // subquery returns the window value directly)
+    assert(rows(
+      """SELECT (SELECT sum(y) OVER (ORDER BY y GROUPS CURRENT ROW)
+        |        FROM VALUES (1), (1) u(y) LIMIT 1) AS sub
+        |FROM VALUES (1) t(x)""".stripMargin) == Seq(Seq(2L)))
   }
 
   test("array_agg/string_agg with inline ORDER BY rewrite to sorted lists (r05)") {
@@ -1007,23 +1001,18 @@ class SqlEngineSpec extends AnyFunSuite {
           |UNION ALL SELECT x, CAST(99 AS BIGINT) FROM VALUES (5) u(x)
           |ORDER BY s""".stripMargin) ==
         """[{"x":1,"s":2},{"x":1,"s":2},{"x":5,"s":99}]""")
-      // a CORRELATED subquery cannot lift: the documented error stays
-      val e = intercept[UnsupportedOperationException] {
-        engine.executeSql(
-          """SELECT v FROM VALUES (1) t(v)
-            |WHERE EXISTS (SELECT sum(x) OVER (ORDER BY x GROUPS CURRENT ROW)
-            |              FROM VALUES (1) u(x) WHERE u.x = t.v)""".stripMargin)
-      }
-      assert(e.getMessage.contains("CORRELATED"), e.getMessage)
-      // LATERAL is never lifted — correlation is its purpose; the
-      // refusal is the README decision record's pinned non-goal (r07)
-      val e2 = intercept[UnsupportedOperationException] {
-        engine.executeSql(
-          """SELECT t.v, d.s FROM VALUES (1) t(v),
-            |LATERAL (SELECT sum(x) OVER (ORDER BY x GROUPS CURRENT ROW) AS s
-            |         FROM VALUES (1) u(x) WHERE u.x <= t.v) d""".stripMargin)
-      }
-      assert(e2.getMessage.contains("GROUPS"), e2.getMessage)
+      // a CORRELATED EXISTS subquery: u.x = t.v holds for v = 1
+      assert(engine.executeSql(
+        """SELECT v FROM VALUES (1) t(v)
+          |WHERE EXISTS (SELECT sum(x) OVER (ORDER BY x GROUPS CURRENT ROW)
+          |              FROM VALUES (1) u(x) WHERE u.x = t.v)""".stripMargin) ==
+        """[{"v":1}]""")
+      // LATERAL: the one row u.x = 1 <= t.v is its own peer group
+      assert(engine.executeSql(
+        """SELECT t.v, d.s FROM VALUES (1) t(v),
+          |LATERAL (SELECT sum(x) OVER (ORDER BY x GROUPS CURRENT ROW) AS s
+          |         FROM VALUES (1) u(x) WHERE u.x <= t.v) d""".stripMargin) ==
+        """[{"v":1,"s":1}]""")
     } finally engine.setResultFormat(ResultFormat.Table)
   }
 
@@ -1042,13 +1031,10 @@ class SqlEngineSpec extends AnyFunSuite {
   }
 
   test("documented gaps fail with clear messages") {
-    // GROUPS over an aggregated query stays an explicit documented gap
-    val e1 = intercept[UnsupportedOperationException] {
-      engine.executeSql(
-        """SELECT sum(sum(x)) OVER (ORDER BY x GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW)
-          |FROM VALUES (1) t(x) GROUP BY x""".stripMargin)
-    }
-    assert(e1.getMessage.contains("GROUPS"))
+    // GROUPS over an aggregated query runs: one group, sum 1
+    assert(rows(
+      """SELECT sum(sum(x)) OVER (ORDER BY x GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW)
+        |FROM VALUES (1) t(x) GROUP BY x""".stripMargin) == Seq(Seq(1L)))
     val e2 = intercept[UnsupportedOperationException] {
       engine.executeSql("SELECT current_time()")
     }
