@@ -57,6 +57,32 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
  * context wins — a caller that builds its own SparkContext before
  * `newSession` keeps Spark's 100-entry cache; apply
  * [[SqlEngine.jvmDefaults]] to that builder to get the same sizing.
+ *
+ * `jvmDefaults` also adds one session extension, [[ParamLiterals]]: a
+ * physical-plan rule that keeps comparison literals out of the generated
+ * source, so a statement that differs from an earlier one only in a
+ * WHERE key reuses the compiled stage. The extension is not a static
+ * conf: it belongs to the builder, and every session that builder
+ * creates (and their `newSession()`s) carries it. A caller's own
+ * session built without `jvmDefaults` gets identical results, but
+ * compiles its stages once per literal value.
+ *
+ * Threads. One engine may serve several threads at once, and so may
+ * several engines on one session or on one context: `executeSql` keeps
+ * no per-call state on the engine, `resultFormat` is a volatile field,
+ * and `s3Roots` is a concurrent map (`ConcurrentClientsSpec` runs every
+ * dialect rewrite from several threads and compares each output with a
+ * serial run). `setResultFormat` and `setS3Config` apply to the
+ * statements that start after them, also within a running multi-statement
+ * call. Known gaps:
+ *  - `newSession` saves the caller's active and default sessions and
+ *    restores them after `create()`; the default session is JVM-wide and
+ *    the save and restore are not atomic, so two threads in `newSession`
+ *    at once may leave either session as the default;
+ *  - two `new SqlEngine` on one session at once can both register a
+ *    `GapFillers` name: the check and the registration are not atomic, so
+ *    the second may replace the first with an equal builder (one more
+ *    warning in the log, same results).
  */
 class SqlEngine(val spark: SparkSession) {
 
@@ -209,20 +235,25 @@ object SqlEngine {
     * is a wiring smoke test; ours identifies this engine. */
   def greet(): String = "hello from graft-spark"
 
-  /** Generated-class cache size: a curation deck fills 129 entries, a
-    * façade deck ~180 stable ones plus ~80 from stages whose literals are
-    * inlined into the source; Guava splits the bound across 4 segments,
-    * so the size leaves headroom. */
+  /** Generated-class cache size: a curation deck fills 129 entries and a
+    * façade deck 179 (perfbench's sf0.1 deck, counted with
+    * `CodegenMetrics`). Each further façade deck adds 6-16, from sources
+    * that still hold a value: RLIKE patterns, the percentile probe's
+    * range bounds, a writer's first use of a format. Guava splits the
+    * bound across 4 segments, so the size leaves headroom. */
   val CodegenCacheEntries = 512
 
   /** SQL executions, jobs and stages the driver keeps status for. */
   val RetainedStatus = 50
 
-  /** The JVM-wide settings every context this project builds carries
-    * (see the class doc). Only static settings live here: each builder
-    * keeps its own session semantics (time zone, ANSI, partitions). */
+  /** The JVM-wide settings every context this project builds carries,
+    * plus the [[ParamLiterals]] extension for the sessions this builder
+    * creates (see the class doc). Only static settings and the
+    * extension live here: each builder keeps its own session semantics
+    * (time zone, ANSI, partitions). */
   def jvmDefaults(builder: SparkSession.Builder): SparkSession.Builder =
     builder
+      .withExtensions(_.injectColumnar(_ => ParamLiterals.columnar))
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config("spark.sql.ui.retainedExecutions", RetainedStatus.toLong)
       .config("spark.ui.retainedJobs", RetainedStatus.toLong)

@@ -22,6 +22,20 @@ object TestSessions {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** A session on the same context built WITHOUT [[SqlEngine.jvmDefaults]],
+    * so without its [[graft.engine.ParamLiterals]] extension: the
+    * session confs come from the shared context, and the caller's active
+    * and default sessions stay what they were. */
+  lazy val plain: SparkSession = {
+    val base = spark
+    val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    val s = SparkSession.builder().create()
+    active.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    default.fold(SparkSession.clearDefaultSession())(SparkSession.setDefaultSession)
+    assert(s.sparkContext eq base.sparkContext)
+    s
+  }
+
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 

@@ -4,6 +4,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkEntry, TestSessions}
+import graft.tables.Tables
 
 /** The JVM-wide codegen class cache holds the engine's working set: a
   * statement compiles its generated classes once per plan shape, not
@@ -56,6 +57,46 @@ class CodegenCacheSpec extends AnyFunSuite {
       val again = compiles(assert(engine.executeSql(statements.head) == firstOut))
       assert(again == 0, s"rerunning the first statement compiled $again classes")
     } finally spark.catalog.dropTempView("cg_rotation")
+  }
+
+  /** Statement shapes whose comparison literals Spark would write into
+    * the generated source; each takes the index of a fresh value. */
+  private val literalShapes: Seq[(String, Int => String)] = Seq(
+    "12 point lookups with distinct BIGINT keys" -> (k =>
+      "SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders " +
+        s"WHERE o_orderkey = ${7 + 11 * k}"),
+    "12 calls of a TIMESTAMP range" -> { k =>
+      val (y, m) = (1995 + k / 12, 1 + k % 12)
+      "SELECT l_returnflag, l_linestatus, sum(l_quantity) AS q, count(*) AS n FROM lineitem " +
+        f"WHERE l_shipdate >= TIMESTAMP '$y-$m%02d-01' AND l_shipdate < TIMESTAMP '${y + 2}-01-01' " +
+        "GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus"
+    },
+    "12 calls of a DOUBLE comparison" -> (k =>
+      s"SELECT c_custkey, c_name, c_acctbal FROM customer WHERE c_acctbal > ${k * 97.25 - 800}D"))
+
+  test("a fresh comparison literal reuses the compiled stage, through the façade or spark.sql") {
+    // a session of the test builder: it carries jvmDefaults' extension
+    val s = spark.newSession()
+    Tables.registerAll(s, TestSessions.sf0001)
+    val engine = new SqlEngine(s)
+    val paths: Seq[(String, String => Any, Int)] = Seq(
+      ("executeSql", engine.executeSql, 0), ("spark.sql", q => s.sql(q).collect(), 24))
+    for ((shape, statement) <- literalShapes; (path, run, from) <- paths) {
+      run(statement(from))
+      val n = compiles((from + 1 to from + 12).foreach(k => run(statement(k))))
+      assert(n == 0, s"$shape through $path compiled $n classes after the first call")
+    }
+  }
+
+  test("without the extension the same shapes compile per literal") {
+    // the control for the test above: its shapes do carry inlined values
+    val s = TestSessions.plain.newSession()
+    Tables.registerAll(s, TestSessions.sf0001)
+    for ((shape, statement) <- literalShapes) {
+      s.sql(statement(48)).collect()
+      val n = compiles((49 to 51).foreach(k => s.sql(statement(k)).collect()))
+      assert(n >= 3, s"$shape compiled only $n classes for 3 fresh literals without the extension")
+    }
   }
 
   test("a second x71 run compiles nothing") {

@@ -12,6 +12,12 @@ class PercentilesSpec extends AnyFunSuite {
 
   private lazy val li = Tables.load(spark, TestSessions.sf001, "lineitem")
 
+  /** Pinned RDD ids as a detached set (see OpsSpec's `pinnedIds`: building
+    * from the iterator copies instead of keeping a view of the map). */
+  @noinline
+  private def pinnedIds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keysIterator.toSet
+
   test("robustStats: median and MAD per group, interpolated like percentile_cont") {
     val df = Seq(("g", 1), ("g", 2), ("g", 4), ("g", 100),
       ("h", 1), ("h", 2), ("h", 3)).toDF("grp", "v")
@@ -149,15 +155,18 @@ class PercentilesSpec extends AnyFunSuite {
     // r04); the r05 buckets are a pure expression, so ANY number of
     // independent instantiations agree — union the same plan against
     // itself and assert the pairs line up
+    val pinnedBefore = pinnedIds()
     val a = Percentiles.exact(li, Seq("l_returnflag"),
       Seq(Percentiles.Spec("l_extendedprice", 0.37, "p")), rangePartitioned = true)
     val b = Percentiles.exact(li, Seq("l_returnflag"),
       Seq(Percentiles.Spec("l_extendedprice", 0.37, "p")), rangePartitioned = true)
     assert(a.join(b, Seq("l_returnflag")).where(a("p") =!= b("p")).count() == 0)
-    // and no storage is pinned after execution (the checkpoint leak)
+    // and no storage is pinned after execution (the checkpoint leak).
+    // Compared with the pins held before the body: an earlier suite's
+    // lazy checkpoint stays pinned until the ContextCleaner collects it.
     a.collect()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      "range mode left cached/checkpointed RDDs behind")
+    val left = pinnedIds() -- pinnedBefore
+    assert(left.isEmpty, s"range mode left cached/checkpointed RDDs $left behind")
   }
 
   test("weighted specs match the buffered frequency-weighted percentile bitwise") {
