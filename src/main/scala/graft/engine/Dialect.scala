@@ -4,7 +4,14 @@ import scala.util.matching.Regex
 
 /**
  * Dialect shims that are syntax (not function-name) level, applied by
- * `SqlEngine` pre-parse.
+ * `SqlEngine` pre-parse. Only syntax Spark's parser rejects is rewritten
+ * here: SIMILAR TO, aggregates with ORDER BY inside the call, and the
+ * GROUPS frame keyword. What Spark parses resolves natively instead:
+ * `generate_series` in FROM is a table function that
+ * `GapFillers.register` adds once per session, so plain `spark.sql` on
+ * an engine's session sees it too. [[maskSameLength]] is the one lexer:
+ * the rewrites and [[StatementSplitter]] read literals and comments
+ * through it.
  *
  * `SIMILAR TO` (SURVEY §2.2 predicate row): SQL-standard pattern
  * matching DataFusion accepts but Spark has no syntax for. Rewritten to
@@ -35,8 +42,8 @@ object Dialect {
     var i = 0
     var state = 0 // 0 code, 1 '…', 2 "…", 3 `…`, 4 --…\n, 5 /*…*/
     var depth5 = 0 // bracketed comments NEST in Spark (r04 review —
-    // StatementSplitter already tracks this; ending at the first */
-    // left the tail commented-but-unmasked, derailing every rewrite)
+    // ending at the first */ left the tail commented-but-unmasked,
+    // derailing every rewrite and every statement cut)
     while (i < arr.length) {
       val c = arr(i)
       state match {
@@ -124,70 +131,6 @@ object Dialect {
         val pat = translatePattern(sql.substring(m.start(2), m.end(2)), esc)
         sb ++= s" ${not}RLIKE '^$pat$$'"
         last = m.end
-      }
-      sb ++= sql.substring(last)
-      sb.toString
-    }
-  }
-
-  private val GenSeries: Regex = """(?i)\bgenerate_series\s*\(""".r
-
-  private val TvfKeyword =
-    """(?i)\b(SELECT|FROM|WHERE|HAVING|JOIN|ON|USING|GROUP|ORDER|LIMIT|OFFSET)\b""".r
-  private val FromOrJoin = """(?is).*(\bfrom|\bjoin)\s*$""".r.pattern
-
-  /** True when position `at` sits in FROM-clause position: directly after
-    * FROM/JOIN, or after a comma whose governing clause keyword (the last
-    * same-depth SELECT/FROM/ON/... before it) belongs to the FROM clause
-    * (FROM itself, or the tail of a join condition: ON/USING) — a comma
-    * in a select list or an argument list does NOT qualify (r03 review:
-    * the old any-comma rule rewrote select-list calls into the very
-    * multi-row-subquery error the guard exists to prevent). */
-  private def inFromPosition(masked: String, at: Int): Boolean = {
-    val before = masked.substring(0, at)
-    if (FromOrJoin.matcher(before).matches()) return true
-    if (!before.trim.endsWith(",")) return false
-    // governing keyword: last keyword before `at` whose paren depth
-    // matches (net parens between the keyword and `at` is zero)
-    TvfKeyword.findAllMatchIn(before).toList.reverseIterator
-      .find { k =>
-        val seg = before.substring(k.end)
-        seg.count(_ == '(') == seg.count(_ == ')')
-      }
-      .exists(k => Set("FROM", "ON", "USING")
-        .contains(k.group(1).toUpperCase(java.util.Locale.ROOT)))
-  }
-
-  /** DataFusion's FROM-clause TVF `generate_series(start, stop[, step])`
-    * (reference: `Cargo.lock:845`, `datafusion-functions-table`) has no
-    * Spark spelling — rewritten to a sequence-explode subquery producing
-    * the same single `value` column:
-    * `FROM generate_series(a, b[, s])` →
-    * `FROM (SELECT explode(sequence(a, b[, s])) AS value)`.
-    * The keyword is located on the literal mask and the argument parens
-    * are balanced on the mask too, so data inside string arguments can
-    * never derail the scan. Only FROM-clause position is rewritten (the
-    * reference supports only the FROM-clause TVF): an expression-
-    * position `generate_series(...)` would become a multi-row scalar
-    * subquery — a confusing runtime error instead of a clean
-    * "undefined function" (ADVICE r02). */
-  def rewriteGenerateSeries(sql: String): String = {
-    val masked = maskSameLength(sql)
-    val ms = GenSeries.findAllMatchIn(masked).toList
-    if (ms.isEmpty) sql
-    else {
-      val sb = new StringBuilder
-      var last = 0
-      ms.foreach { m =>
-        if (m.start >= last && inFromPosition(masked, m.start)) {
-          val i = skipBalanced(masked, m.end)
-          if (i > 0) {
-            val args = sql.substring(m.end, i - 1)
-            sb ++= sql.substring(last, m.start)
-            sb ++= s"(SELECT explode(sequence($args)) AS value)"
-            last = i
-          }
-        }
       }
       sb ++= sql.substring(last)
       sb.toString
@@ -298,6 +241,11 @@ object Dialect {
     *    size. O(group size) state — hot 100 TB paths should prefer the
     *    single-key shape or call min_by directly.
     *
+    * The list aggregates take ORDER BY inside the call too. Ordered
+    * `string_agg`/`listagg` become Spark's own `WITHIN GROUP (ORDER BY
+    * ...)` form; ordered `array_agg`, which Spark refuses WITHIN GROUP
+    * for, becomes the comparator-sorted list unwrapped to its values.
+    *
     * Arguments are scanned with balanced parens, so nested calls like
     * `first_value(round(x, 2) ORDER BY y)` rewrite correctly (both r02
     * gaps). Window forms (no ORDER BY inside the call parens, or
@@ -365,22 +313,25 @@ object Dialect {
               case _ => (exprPartRaw.trim, "-1")
             }
             val keys = parseSortKeys(argsRaw.substring(obE), argsMasked.substring(obE))
-            val listFns = Set("ARRAY_AGG", "STRING_AGG", "LISTAGG")
             val replacement =
-              if (listFns.contains(fn)) {
-                // DataFusion accepts ORDER BY inside array_agg/string_agg
-                // (`Cargo.lock:809`); Spark's collect_list/listagg have no
-                // inline ordering, so sort a keyed struct list with the
-                // same comparator machinery and unwrap. string_agg skips
-                // null values — array_join does too. O(group size) state,
-                // inherent to the aggregate's own semantics.
+              if (fn == "STRING_AGG" || fn == "LISTAGG") {
+                // DataFusion accepts ORDER BY inside string_agg
+                // (`Cargo.lock:809`); Spark spells the same ordered
+                // aggregate `listagg(x, d) WITHIN GROUP (ORDER BY ...)`
+                // (string_agg is its alias), with FILTER after it. Both
+                // skip null values and give NULL when none is left.
+                s"${m.group(1)}($valueExpr, $idx) WITHIN GROUP " +
+                  s"(ORDER BY ${pinSortKeys(keys)})$filterClause"
+              } else if (fn == "ARRAY_AGG") {
+                // Spark's collect_list has no ordering and rejects WITHIN
+                // GROUP: sort a keyed struct list with the comparator and
+                // unwrap. O(group size) state, inherent to the aggregate.
                 val fields = keys.zipWithIndex
                   .map { case (k, n) => s"'k$n', ${k.expr}" }
                   .mkString(", ")
-                val arr = s"transform(array_sort(collect_list(" +
+                s"transform(array_sort(collect_list(" +
                   s"named_struct($fields, 'v', $valueExpr))$filterClause, " +
                   s"(a, b) -> ${comparatorCase(keys)}), s -> s.v)"
-                if (fn == "ARRAY_AGG") arr else s"array_join($arr, $idx)"
               } else if (fn != "NTH_VALUE" && keys.length == 1 && filterClause.isEmpty) {
                 // constant-memory path. byKey follows the key direction;
                 // null-key rows win the frame edge when the null ordering

@@ -35,7 +35,9 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
  * registers [[InfoSchema]] as a catalog there (plain `spark.sql` sees it
  * too), and `information_schema.df_settings` lists that one extra row.
  * The GapFillers functions are registered into the session's function
- * registry once. [[GroupsFrames]] adds one optimizer rule to
+ * registry once, and one table function, `generate_series`, into its
+ * table function registry; plain `spark.sql` on the session resolves
+ * them too. [[GroupsFrames]] adds one optimizer rule to
  * `spark.experimental.extraOptimizations` and one internal function,
  * `__graft_groups`, to the registry, also once. A second engine on the
  * same session finds all of them in place.
@@ -76,9 +78,9 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
  * statements that start after them, also within a running multi-statement
  * call. Known gaps:
  *  - `newSession` saves the caller's active and default sessions and
- *    restores them after `create()`; the default session is JVM-wide and
- *    the save and restore are not atomic, so two threads in `newSession`
- *    at once may leave either session as the default;
+ *    restores (or clears) them after `create()`; the default session is
+ *    JVM-wide and the save and restore are not atomic, so two threads in
+ *    `newSession` at once may leave either session as the default;
  *  - two `new SqlEngine` on one session at once can both register a
  *    `GapFillers` name: the check and the registration are not atomic, so
  *    the second may replace the first with an equal builder (one more
@@ -173,14 +175,15 @@ class SqlEngine(val spark: SparkSession) {
     // SIMILAR TO locates the keyword on a same-length literal mask (its
     // pattern IS a literal, but the keyword must sit outside one); the
     // information_schema case fold applies only outside string literals.
-    val sparkText = Dialect.rewriteAggFirstLast(Dialect.rewriteGenerateSeries(
-      Dialect.rewriteSimilarTo(Dialect.markGroupsFrames(stmt))))
+    val sparkText = Dialect.rewriteAggFirstLast(
+      Dialect.rewriteSimilarTo(Dialect.markGroupsFrames(stmt)))
     val translated = Dialect.outsideLiterals(
       DdlTranslator.translate(sparkText, rewriteS3Url))(InfoSchema.foldPrefix)
     // One spark.sql per statement: it parses and analyzes the text, and
     // runs a command (DDL/DML) eagerly, exactly once. DataFusion's
-    // function spellings (`to_hex`, `approx_distinct`, ...) resolve here
-    // through the registry entries `GapFillers.register` adds.
+    // function spellings (`to_hex`, `approx_distinct`, ...) and its
+    // `generate_series` table function resolve here through the registry
+    // entries `GapFillers.register` adds.
     // Then the plan-level percentile match: when the analyzed plan
     // carries MEDIAN/PERCENTILE_CONT anywhere (joins, CTEs, HAVING,
     // mixed lists, views), its Aggregates are rewritten onto the
@@ -264,7 +267,9 @@ object SqlEngine {
     * [[jvmDefaults]]. Always a new session, on the running SparkContext
     * if there is one: `getOrCreate` would hand back a caller's active
     * session with these confs written over its own. The caller's active
-    * and default sessions stay what they were. */
+    * and default sessions stay what they were, also when there were
+    * none: `create()` sets both to the new session, and they are cleared
+    * again. */
   def newSession(master: String = "local[*]"): SqlEngine = {
     val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
     val spark = jvmDefaults(SparkSession.builder())
@@ -276,8 +281,8 @@ object SqlEngine {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
       .create()
-    active.foreach(SparkSession.setActiveSession)
-    default.foreach(SparkSession.setDefaultSession)
+    active.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    default.fold(SparkSession.clearDefaultSession())(SparkSession.setDefaultSession)
     new SqlEngine(spark)
   }
 }

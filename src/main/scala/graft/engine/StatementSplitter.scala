@@ -1,62 +1,23 @@
 package graft.engine
 
-import scala.collection.mutable.ArrayBuffer
-
 /**
- * Quote/comment-aware splitting of a multi-statement SQL string on `;`.
+ * Splitting of a multi-statement SQL string on `;`.
  *
  * The reference accepts multi-statement SQL in one call — `DFParser::
  * parse_sql` returns a statement vector that `execute_inner` loops over
  * (reference: `src/core.rs:103-125`). Spark's `spark.sql` is single-
- * statement, so the engine splits first. Handles:
- *  - single-quoted strings with `''` escape;
- *  - double-quoted identifiers (`""` escape);
- *  - backtick identifiers (Spark dialect);
- *  - `--` line comments and nested `/* */` block comments (both are part
- *    of the retained statement text).
+ * statement, so the engine splits first, at each `;` that
+ * [[Dialect.maskSameLength]] leaves in code: a `;` inside a string
+ * literal, a quoted identifier or a comment is content. Comments stay
+ * part of the statement text.
  */
 object StatementSplitter {
 
   def split(sql: String): Seq[String] = {
-    val out = ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var i = 0
-    val n = sql.length
-    var state: Char = 'n' // n=normal, '\''=string, '"'=quoted-ident, '`'=backtick, '-'=line-comment, '*'=block-comment
-    var blockDepth = 0
-
-    def push(): Unit = {
-      val s = cur.toString.trim
-      if (s.nonEmpty) out += s
-      cur.clear()
-    }
-
-    while (i < n) {
-      val c = sql.charAt(i)
-      val next = if (i + 1 < n) sql.charAt(i + 1) else '\u0000'
-      state match {
-        case 'n' =>
-          c match {
-            case ';' => push(); i += 1
-            case '\'' | '"' | '`' => state = c; cur += c; i += 1
-            case '-' if next == '-' => state = '-'; cur += c += next; i += 2
-            case '/' if next == '*' => state = '*'; blockDepth = 1; cur += c += next; i += 2
-            case _ => cur += c; i += 1
-          }
-        case '\'' | '"' | '`' =>
-          if (c == '\\' && i + 1 < n && state != '`') { cur += c += next; i += 2 } // \' backslash escape
-          else if (c == state && next == state && state != '`') { cur += c += next; i += 2 } // '' / "" escape
-          else { if (c == state) state = 'n'; cur += c; i += 1 }
-        case '-' =>
-          if (c == '\n') state = 'n'
-          cur += c; i += 1
-        case '*' =>
-          if (c == '*' && next == '/') { blockDepth -= 1; if (blockDepth == 0) state = 'n'; cur += c += next; i += 2 }
-          else if (c == '/' && next == '*') { blockDepth += 1; cur += c += next; i += 2 }
-          else { cur += c; i += 1 }
-      }
-    }
-    push()
-    out.toSeq
+    val masked = Dialect.maskSameLength(sql)
+    val cuts = masked.indices.filter(masked.charAt(_) == ';')
+    ((-1 +: cuts) :+ sql.length).sliding(2)
+      .map(w => sql.substring(w(0) + 1, w(1)).trim)
+      .filter(_.nonEmpty).toSeq
   }
 }

@@ -2,17 +2,18 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedAttribute}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.ApproximatePercentile
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, OneRowRelation}
 import org.apache.spark.unsafe.types.CalendarInterval
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * The function-surface gap between DataFusion 45's scalar library and
- * Spark built-ins (SURVEY.md §2.8/§7.5). Two mechanisms:
+ * Spark built-ins (SURVEY.md §2.8/§7.5). Three mechanisms:
  *
  *  1. **Custom Catalyst expressions** registered into the session
  *     `FunctionRegistry` (`register`): `gcd`, `lcm`, `iszero`, `date_bin`,
@@ -26,6 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
  *     builtin builder, so Catalyst resolves them like any function —
  *     in `spark.sql` and `expr()` too, not only in `executeSql`.
  *     `string_agg` needs no entry: Spark ships it.
+ *  3. **A table function** in the session's `TableFunctionRegistry`:
+ *     `generate_series(start, stop[, step])`, which resolves to an
+ *     explode of `sequence(start, stop[, step])` with one `value` column.
  *
  * Known non-goals (documented, matching SURVEY §7.5): `current_time` /
  * the TIME type (Spark has none). GROUPS window frames are a token mark
@@ -315,7 +319,8 @@ object GapFillers {
   /** Registers each function into the session's registry once: a name
     * is (re)bound only while the session lacks it or still holds Spark's
     * own builder for it — `version`, `to_char`, `encode` and `decode`
-    * override builtins, so "exists" alone would leave those unbound. */
+    * override builtins, so "exists" alone would leave those unbound.
+    * The table function is added once, when the session lacks it. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     def f(name: String)(b: Seq[Expression] => Expression): Unit = {
@@ -417,6 +422,19 @@ object GapFillers {
     aliases.foreach { case (alias, target) =>
       f(alias)(FunctionRegistry.builtin.lookupFunctionBuilder(FunctionIdentifier(target)).get)
     }
+    // DataFusion's FROM-clause table function generate_series(start,
+    // stop[, step]) (`datafusion-functions-table`): one `value` column,
+    // one row per element of Spark's `sequence` over the same arguments,
+    // whose builder also checks their number. Spark parses the call and
+    // resolves it here, so an alias, a column alias list and a comma join
+    // work as for `range`.
+    val tables = spark.sessionState.tableFunctionRegistry
+    val sequence = FunctionRegistry.builtin.lookupFunctionBuilder(FunctionIdentifier("sequence")).get
+    if (!tables.functionExists(FunctionIdentifier("generate_series")))
+      tables.createOrReplaceTempFunction("generate_series", args =>
+        Generate(Explode(sequence(args)), unrequiredChildIndex = Nil, outer = false,
+          qualifier = None, generatorOutput = Seq(UnresolvedAttribute("value")),
+          child = OneRowRelation()), "built-in")
   }
 
   // ------------------------------------------------------------ aliases

@@ -508,18 +508,18 @@ object Relational {
 
   // ---------------------------------------------------------------- q51
   // The DataFusion FROM-clause TVF spelling (SURVEY §2.1, reference
-  // Cargo.lock:845) — exercised through the engine's pre-parse rewrite,
-  // which is exactly what `SqlEngine.executeStatement` applies; DuckDB
-  // has the TVF natively (column named `generate_series`).
+  // Cargo.lock:845) — run through `SqlEngine.executeStatement`, whose
+  // session resolves it as a table function; DuckDB has the TVF natively
+  // (column named `generate_series`).
   val q51 = Q.df(
     "q51_generate_series_tvf",
     """SELECT CAST(generate_series AS BIGINT) AS value,
       |  CAST(generate_series * 2 AS BIGINT) AS doubled
       |FROM generate_series(2, 20, 3) ORDER BY value""".stripMargin) { (spark, dir) =>
     graft.tables.Tables.registerAll(spark, dir)
-    spark.sql(graft.engine.Dialect.rewriteGenerateSeries(
+    new graft.engine.SqlEngine(spark).executeStatement(
       """SELECT CAST(value AS BIGINT) AS value, CAST(value * 2 AS BIGINT) AS doubled
-        |FROM generate_series(2, 20, 3) ORDER BY value""".stripMargin))
+        |FROM generate_series(2, 20, 3) ORDER BY value""".stripMargin)
   }
 
   val q33 = Q.df(

@@ -70,8 +70,7 @@ class SplitterPropertySpec extends AnyFunSuite {
     samples(Gen.zip(word, sqlFragmentData)).foreach { case (w, frag) =>
       val sql = s"SELECT '$w $frag' AS doc, $w() AS k"
       val rewritten = Dialect.rewriteAggFirstLast(
-        Dialect.rewriteGenerateSeries(Dialect.rewriteSimilarTo(
-          Dialect.markGroupsFrames(sql))))
+        Dialect.rewriteSimilarTo(Dialect.markGroupsFrames(sql)))
       assert(rewritten == sql, s"input: $sql")
     }
   }

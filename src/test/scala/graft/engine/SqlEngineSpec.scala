@@ -24,6 +24,22 @@ class SqlEngineSpec extends AnyFunSuite {
     assert(SparkSession.getDefaultSession.contains(spark))
   }
 
+  test("newSession leaves no active or default session when the caller had none") {
+    val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    assert(spark ne null) // the shared context exists; newSession reuses it
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val fresh = SqlEngine.newSession("local[4]").spark
+      assert(fresh.conf.get("spark.sql.shuffle.partitions") == "32")
+      assert(SparkSession.getActiveSession.isEmpty)
+      assert(SparkSession.getDefaultSession.isEmpty)
+    } finally {
+      active.foreach(SparkSession.setActiveSession)
+      default.foreach(SparkSession.setDefaultSession)
+    }
+  }
+
   test("greet is wired") {
     assert(SqlEngine.greet() == "hello from graft-spark")
   }
@@ -832,7 +848,7 @@ class SqlEngineSpec extends AnyFunSuite {
           |FROM VALUES ('b', 2), ('a', 1), ('c', 3) t(x, k)""".stripMargin) ==
         """[{"a":["c","b","a"],"s":"a-b-c"}]""")
       // multi-key ordering + FILTER clause; null values skipped by
-      // string_agg (array_join) like the reference
+      // string_agg like the reference
       assert(engine.executeSql(
         """SELECT string_agg(x, ',' ORDER BY k1, k2 DESC) FILTER (WHERE k1 < 3) AS s
           |FROM VALUES ('a', 1, 1), ('b', 1, 2), ('c', 3, 0), (CAST(NULL AS STRING), 2, 0) t(x, k1, k2)""".stripMargin) ==
@@ -842,6 +858,22 @@ class SqlEngineSpec extends AnyFunSuite {
         "SELECT array_agg(x) AS a FROM VALUES (1), (1) t(x)") ==
         """[{"a":[1,1]}]""")
     } finally engine.setResultFormat(ResultFormat.Table)
+  }
+
+  test("ordered string_agg/listagg return NULL when no value is left, as DuckDB does") {
+    // an all-NULL group, an empty global input, a FILTER that removes every row
+    Seq("string_agg", "listagg").foreach { fn =>
+      assert(rows(
+        s"""SELECT g, $fn(x, ',' ORDER BY k) AS s
+           |FROM VALUES (1, CAST(NULL AS STRING), 1), (1, NULL, 2), (2, 'a', 1) t(g, x, k)
+           |GROUP BY g ORDER BY g""".stripMargin) == Seq(Seq(1, null), Seq(2, "a")), fn)
+      assert(rows(
+        s"""SELECT $fn(x, ',' ORDER BY k DESC) AS s
+           |FROM VALUES ('a', 1) t(x, k) WHERE k > 5""".stripMargin) == Seq(Seq(null)), fn)
+      assert(rows(
+        s"""SELECT $fn(x, ',' ORDER BY k) FILTER (WHERE k > 5) AS s
+           |FROM VALUES ('a', 1), ('b', 2) t(x, k)""".stripMargin) == Seq(Seq(null)), fn)
+    }
   }
 
   test("named-window chains resolve before the GROUPS rewrite (r05)") {
