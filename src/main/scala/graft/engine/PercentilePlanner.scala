@@ -120,7 +120,7 @@ object PercentilePlanner {
       case _ => None // null, or an array of percentages
     }).filter(p => p >= 0.0 && p <= 1.0)
 
-  /** Rebuild one Aggregate around `Percentiles.exactAdaptive`. The
+  /** Rebuild one Aggregate around `Percentiles.exact`. The
     * replacement keeps the node's exact output: one pinned-exprId alias
     * per original output column.
     *
@@ -296,11 +296,10 @@ object PercentilePlanner {
       Project(gAliases ++ vAliases ++ prAliases, agg.child))
     // COUNT(*) riding uses the melted row weights, which weighted specs
     // repurpose — counts fall back to the residual branch then
-    var aDf = Percentiles.exactAdaptive(projected, gNames, specs,
+    var aDf = Percentiles.exact(projected, gNames, specs,
       rowCountCol = if (countSlots.nonEmpty && !anyWeighted) Some("__pct_rows") else None,
       extraCols = projExtra.values.map(_._2).toSeq,
-      extraAggs = rideAggs.toSeq.map { case (n, ae) => n -> PlanBridge.column(ae) },
-      knownPartitions = statsPartitions(agg, vNames.size))
+      extraAggs = rideAggs.toSeq.map { case (n, ae) => n -> PlanBridge.column(ae) })
     if (gExprs.isEmpty)
       // a global SQL aggregate emits one (all-null) row over empty
       // input; the pipeline emits none — compensate
@@ -341,29 +340,6 @@ object PercentilePlanner {
         else ne.toAttribute
       }
     Some(Project(outExprs, joined))
-  }
-
-  /** The cardinality half of the adaptive probe, answered from
-    * catalog/CBO statistics when available (VERDICT r05 next #5): the
-    * (group, column) partition count is (distinct group keys) x (melted
-    * value columns). Attribute-level distinct counts exist when the
-    * table was ANALYZEd FOR COLUMNS and `spark.sql.cbo.enabled` is on;
-    * the product over grouping attributes (capped by the child's row
-    * count when known) upper-bounds the key cardinality. None -> the
-    * planner falls back to the scan probe. Correctness never depends on
-    * the estimate: a wrong one only picks the slower sort mode. */
-  private def statsPartitions(agg: Aggregate, meltCols: Int): Option[Long] = {
-    if (agg.groupingExpressions.isEmpty) return Some(math.max(1, meltCols).toLong)
-    val stats = agg.child.stats
-    val counts = agg.groupingExpressions.map {
-      case a: Attribute => stats.attributeStats.get(a).flatMap(_.distinctCount)
-      case _ => None
-    }
-    if (counts.exists(_.isEmpty)) return None
-    val prod = counts.flatten.product
-    val keys = stats.rowCount.fold(prod)(rc => prod.min(rc))
-    val parts = (keys * meltCols).min(BigInt(Long.MaxValue))
-    Some(math.max(1L, parts.toLong))
   }
 
   /** Pin the replacement column to the original output's name, exprId

@@ -192,13 +192,11 @@ class SqlEngine(val spark: SparkSession) {
     // results, bounded memory at any group size (VERDICT r03 #1).
     // Commands come back as a `CommandResult` with no Aggregate, and
     // non-matching shapes keep this DataFrame, never an error.
-    // SURFACE CONTRACT (ADVICE r05): planning a matching percentile
-    // statement may run a small Spark job HERE, at executeStatement
-    // time, before the returned DataFrame is ever acted on — the
-    // adaptive mode probe collects group cardinality + range boundaries
-    // (grouping/value columns only, memoized per plan shape, and
-    // skipped entirely when catalog/CBO statistics answer the
-    // cardinality question and pick the default mode, r06).
+    // SURFACE CONTRACT (ADVICE r05): planning a GLOBAL percentile (no
+    // GROUP BY) may run one small Spark job HERE, at executeStatement
+    // time, before the returned DataFrame is ever acted on — the range
+    // mode's bounds probe over the value columns, memoized per plan
+    // shape. A grouped percentile runs no job before it is acted on.
     val sparkDf = try spark.sql(translated) catch {
       // the GROUPS marker is a session function, which a permanent view
       // may not reference
@@ -240,9 +238,10 @@ object SqlEngine {
 
   /** Generated-class cache size: a curation deck fills 129 entries and a
     * façade deck 179 (perfbench's sf0.1 deck, counted with
-    * `CodegenMetrics`). Each further façade deck adds 6-16, from sources
-    * that still hold a value: RLIKE patterns, the percentile probe's
-    * range bounds, a writer's first use of a format. Guava splits the
+    * `CodegenMetrics`). Each further façade deck adds up to 16, from
+    * sources that still hold a value: RLIKE patterns and a writer's first
+    * use of a format (outside the deck, a global percentile's range
+    * bounds too). Guava splits the
     * bound across 4 segments, so the size leaves headroom. */
   val CodegenCacheEntries = 512
 

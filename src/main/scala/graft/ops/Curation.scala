@@ -114,7 +114,7 @@ object Curation {
       col(sizeCol).as("__ds_w"))
     // extraAggs contract: restrict to one melted copy per source row
     val one = col("__pct_c") === 0
-    Percentiles.exactAdaptive(prepped, Seq(groupCol),
+    Percentiles.exact(prepped, Seq(groupCol),
         Seq(Percentiles.Spec(sizeCol, 0.5, "median_chars")),
         rowCountCol = Some("n_docs"),
         extraCols = Seq("__ds_w"),

@@ -90,8 +90,7 @@ object Selection {
     * outlier-trim step of corpus curation ("drop documents whose size is
     * anomalous for their source"). Quartiles are EXACT, computed by the
     * engine's rank-selection percentile machinery ([[Percentiles]] — the
-    * adaptive plan that never buffers a group's values and spreads giant
-    * groups over all reducers), so the fences are bit-for-bit
+    * plan that never buffers a group's values), so the fences are bit-for-bit
     * reproducible against a `percentile_cont` oracle.
     *
     * NULL contract (ADVICE r06): rows with a NULL group or NULL value are
@@ -108,7 +107,7 @@ object Selection {
   def iqrOutliers(df: DataFrame, group: String, value: String,
       k: Double = 1.5): DataFrame = {
     require(k >= 0, s"fence multiplier must be non-negative, got $k")
-    val bounds = Percentiles.exactAdaptive(df, Seq(group),
+    val bounds = Percentiles.exact(df, Seq(group),
       Seq(Percentiles.Spec(value, 0.25, "__iqr_q1"),
         Percentiles.Spec(value, 0.75, "__iqr_q3")))
     // fence expressions mirror the oracle's `q1 - k*(q3-q1)` shape so the
@@ -145,7 +144,7 @@ object Selection {
       outName: String = "winsorized"): DataFrame = {
     require(0 <= pLo && pLo <= pHi && pHi <= 1,
       s"need 0 <= pLo <= pHi <= 1, got ($pLo, $pHi)")
-    val bounds = Percentiles.exactAdaptive(df, Seq(group),
+    val bounds = Percentiles.exact(df, Seq(group),
         Seq(Percentiles.Spec(value, pLo, "__wz_lo"),
           Percentiles.Spec(value, pHi, "__wz_hi")))
       .select(col(group), round(col("__wz_lo"), 9).as("__wz_lo"),
@@ -168,7 +167,7 @@ object Selection {
     * final reports @6 (the x28 contract).
     *
     * Scale: the fences ride ONE melted rank-selection pass
-    * ([[Percentiles.exactAdaptive]]); the filter+mean is a broadcast
+    * ([[Percentiles.exact]]); the filter+mean is a broadcast
     * join-back plus one partial→final aggregate — the corpus shuffles
     * only its group keys. Scoring the corpus against its own
     * statistics is two lineage passes by repo convention. */
@@ -176,7 +175,7 @@ object Selection {
       pLo: Double = 0.05, pHi: Double = 0.95): DataFrame = {
     require(0 <= pLo && pLo <= pHi && pHi <= 1,
       s"need 0 <= pLo <= pHi <= 1, got ($pLo, $pHi)")
-    val bounds = Percentiles.exactAdaptive(df, Seq(group),
+    val bounds = Percentiles.exact(df, Seq(group),
         Seq(Percentiles.Spec(value, pLo, "__tm_lo"),
           Percentiles.Spec(value, pHi, "__tm_hi")))
       .select(col(group), round(col("__tm_lo"), 9).as("__tm_lo"),
@@ -227,7 +226,7 @@ object Selection {
     require(n >= 2 && n <= 1024, s"bucket count $n outside [2, 1024]")
     val specs = (1 until n).map(i =>
       Percentiles.Spec(valueCol, i.toDouble / n, s"__qb_$i"))
-    val bounds = Percentiles.exactAdaptive(df, Nil, specs)
+    val bounds = Percentiles.exact(df, Nil, specs)
       .select((1 until n).map(i => round(col(s"__qb_$i"), 9).as(s"__qb_$i")): _*)
     val v = col(valueCol).cast("double")
     // bucket ids in [lo, hi]; descend on the boundary between the halves
@@ -256,7 +255,7 @@ object Selection {
    * upstream to assign a floor instead.
    *
    * Scale: ALL signals' `n−1` boundaries come from ONE
-   * [[Percentiles.exactAdaptive]] pass (the melted rank-selection plan
+   * [[Percentiles.exact]] pass (the melted rank-selection plan
    * — one corpus scan however many signals), broadcast back as a
    * single 1-row frame; each bucket is the same log₂(n) CaseWhen
    * binary search as [[quantileBuckets]] and the blend is plain
@@ -273,7 +272,7 @@ object Selection {
     val specs = signals.zipWithIndex.flatMap { case ((c, _), s) =>
       (1 until n).map(i =>
         Percentiles.Spec(c, i.toDouble / n, s"__rb_${s}_$i")) }
-    val bounds = Percentiles.exactAdaptive(df, Nil, specs)
+    val bounds = Percentiles.exact(df, Nil, specs)
       .select(specs.map(sp => round(col(sp.outName), 9).as(sp.outName)): _*)
     def tree(s: Int, v: Column, lo: Int, hi: Int): Column =
       if (lo == hi) lit(lo)
@@ -353,8 +352,8 @@ object Selection {
     * `(group, cutoff, total, kept, observed_retention)`. Apply with
     * [[retentionFilter]].
     *
-    * Scale: one adaptive rank-selection pass for the percentiles (no
-    * per-group sort or buffering — the [[Percentiles.exactAdaptive]]
+    * Scale: one rank-selection pass for the percentiles (no
+    * per-group sort or buffering — the [[Percentiles.exact]]
     * machinery), then one partial→final count aggregate for `kept`
     * with the group-count-sized cutoff table broadcast onto the scan.
     * Nothing corpus-sized shuffles besides the percentile's own melt. */
@@ -365,7 +364,7 @@ object Selection {
       withTotal: Boolean): DataFrame = {
     require(targetRetention > 0.0 && targetRetention < 1.0,
       s"targetRetention must be in (0, 1), got $targetRetention")
-    Percentiles.exactAdaptive(df, Seq(groupCol),
+    Percentiles.exact(df, Seq(groupCol),
       Seq(Percentiles.Spec(scoreCol, 1.0 - targetRetention, "cutoff")),
       rowCountCol = if (withTotal) Some("total") else None)
   }

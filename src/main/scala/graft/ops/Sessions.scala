@@ -88,7 +88,7 @@ object Sessions {
     *
     * Scale: the corpus-sized work is ONE partial→final count aggregate
     * keyed on (group, window); the robust stats run on the window-count
-    * frame (windows × groups rows, not events) via the adaptive
+    * frame (windows × groups rows, not events) via the
     * rank-selection percentiles, and broadcast back. */
   def windowAnomalies(events: DataFrame, ts: String, group: String,
       windowSeconds: Long, minAbsZ: Double): DataFrame = {

@@ -198,10 +198,9 @@ object Functions {
   // DuckDB oracle unchanged) with every stage memory-bounded. The SQL
   // surface (MEDIAN / PERCENTILE_CONT WITHIN GROUP) still parses and runs
   // via the dialect layer for parity; this query pins the scale plan.
-  // r05: exactAdaptive — 3 groups × 2 measure columns is exactly the
-  // few-giant-groups regime (6 single-reducer sorts of the whole corpus
-  // at 100×, VERDICT r04 #1), so the probe dispatches this to the
-  // range-partitioned mode spreading each sort over all reducers.
+  // A grouped call, so `exact` takes the default window sort: 3 groups ×
+  // 2 measure columns is 6 sorts, and at 10× sf0.1 those still beat the
+  // range-partitioned mode (8.8-10.2 s against 12.0-15.5 s, `local[4]`).
   val q41 = Q.df(
     "q41_median_percentile",
     """SELECT l_returnflag,
@@ -211,7 +210,7 @@ object Functions {
       |  ROUND(PERCENTILE_CONT(0.75) WITHIN GROUP (ORDER BY l_extendedprice), 4) AS q3_price
       |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (spark, dir) =>
     import graft.ops.Percentiles
-    Percentiles.exactAdaptive(Tables.load(spark, dir, "lineitem"), Seq("l_returnflag"), Seq(
+    Percentiles.exact(Tables.load(spark, dir, "lineitem"), Seq("l_returnflag"), Seq(
         Percentiles.Spec("l_quantity", 0.5, "med_qty"),
         Percentiles.Spec("l_quantity", 0.25, "q1_qty"),
         Percentiles.Spec("l_extendedprice", 0.5, "med_price_raw"),

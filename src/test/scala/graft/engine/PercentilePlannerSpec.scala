@@ -113,17 +113,6 @@ class PercentilePlannerSpec extends AnyFunSuite {
     "FileScan parquet".r
       .findAllIn(df.queryExecution.executedPlan.toString).length
 
-  /** Run `f` with shuffle partitions pinned so the adaptive dispatch
-    * takes the DEFAULT sort mode (range mode deliberately re-instantiates
-    * its lineage-pure bucketed subtree — its scan count is 2 by design:
-    * the local-rank window and the cells aggregation each execute the
-    * melt). Single-scan asserts are meaningful in default mode. */
-  private def withSlices[A](n: Int)(f: => A): A = {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", before)
-  }
-
   test("mixed aggregates are SINGLE-PASS: residuals ride the melted scan (r06)") {
     withTables {
       // SUM/AVG/MIN/MAX/COUNT(col) beside two percentiles: ONE scan of
@@ -145,7 +134,7 @@ class PercentilePlannerSpec extends AnyFunSuite {
   }
 
   test("FILTER and DISTINCT residual aggregates ride the melt too") {
-    withTables { withSlices(2) {
+    withTables {
       val q =
         """SELECT l_returnflag, MEDIAN(l_quantity) AS m,
           |  SUM(l_quantity) FILTER (WHERE l_linenumber <= 2) AS s2,
@@ -156,11 +145,11 @@ class PercentilePlannerSpec extends AnyFunSuite {
       assert(scanCount(fast.get) == 1,
         s"expected ONE scan, got:\n${fast.get.queryExecution.executedPlan}")
       assert(fast.get.collect().sameElements(spark.sql(q).collect()))
-    } }
+    }
   }
 
   test("percentiles nested inside expressions become rank-selection specs") {
-    withTables { withSlices(2) {
+    withTables {
       // MEDIAN(x) + 1 used to keep the buffered per-group-unbounded
       // Median via the residual branch; now it rides as its own spec
       val q =
@@ -169,7 +158,7 @@ class PercentilePlannerSpec extends AnyFunSuite {
           |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
       assertScalePlan(q)
       assert(scanCount(PercentilePlanner.rewrite(spark, spark.sql(q)).get) == 1)
-    } }
+    }
   }
 
   test("ROLLUP + ridden residuals: riders aggregate the Expand output correctly") {
@@ -197,43 +186,34 @@ class PercentilePlannerSpec extends AnyFunSuite {
     }
   }
 
-  test("catalog statistics answer the mode probe: no job at plan time (r06)") {
-    val cbo = spark.conf.get("spark.sql.cbo.enabled", "false")
-    spark.sql("DROP TABLE IF EXISTS pstats_t")
-    try {
-      Tables.load(spark, TestSessions.sf001, "lineitem")
-        .createOrReplaceTempView("lineitem")
-      spark.sql("""CREATE TABLE pstats_t USING parquet AS
-        SELECT l_orderkey, l_returnflag, l_quantity, l_extendedprice FROM lineitem""")
-      spark.sql("""ANALYZE TABLE pstats_t COMPUTE STATISTICS
-        FOR COLUMNS l_orderkey, l_returnflag""")
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      // high-distinct group key (l_orderkey): stats pick the default
-      // mode, so NO probe scan may run while planning (the synchronous
-      // probeRuns counter pins it — listener job counts are async)
-      val hi = """SELECT l_orderkey, MEDIAN(l_quantity) AS m, SUM(l_quantity) AS s
-        FROM pstats_t GROUP BY l_orderkey ORDER BY l_orderkey"""
-      val before = graft.ops.Percentiles.probeRuns.get()
-      val fastHi = PercentilePlanner.rewrite(spark, spark.sql(hi))
-      assert(fastHi.isDefined)
-      assert(graft.ops.Percentiles.probeRuns.get() == before,
-        "stats-backed planning must not launch a probe scan")
-      assert(!fastHi.get.queryExecution.executedPlan.toString.contains("__pct_b"),
-        "high-cardinality stats must pick the default sort mode")
-      assert(fastHi.get.collect().sameElements(spark.sql(hi).collect()))
-      // low-distinct group key (l_returnflag, 3 values): stats pick
-      // range mode (boundaries still need the one bounds probe)
-      val lo = """SELECT l_returnflag, MEDIAN(l_quantity) AS m
-        FROM pstats_t GROUP BY l_returnflag ORDER BY l_returnflag"""
-      val fastLo = PercentilePlanner.rewrite(spark, spark.sql(lo))
-      assert(fastLo.isDefined)
-      assert(fastLo.get.queryExecution.executedPlan.toString.contains("__pct_b"),
-        "low-cardinality stats must pick the range mode")
-      assert(fastLo.get.collect().sameElements(spark.sql(lo).collect()))
+  test("a grouped percentile runs no job while planning") {
+    // perfbench's percentile template: the GROUP BY alone picks the
+    // default sort, so neither the engine's 32 slices nor the test
+    // session's 4 make planning run the bounds probe or a job (the
+    // synchronous probeRuns counter pins the probe; a fresh literal per
+    // run keeps a memoized probe from hiding one)
+    Tables.load(spark, TestSessions.sf001, "customer")
+      .createOrReplaceTempView("customer")
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    try for ((slices, key) <- Seq("32" -> 7, "4" -> 11)) {
+      spark.conf.set("spark.sql.shuffle.partitions", slices)
+      val q = s"""SELECT c_mktsegment, MEDIAN(c_acctbal) AS med_bal,
+        PERCENTILE_CONT(0.9) WITHIN GROUP (ORDER BY c_acctbal) AS p90_bal
+        FROM customer WHERE c_nationkey = $key
+        GROUP BY c_mktsegment ORDER BY c_mktsegment"""
+      val runs = graft.ops.Percentiles.probeRuns.get()
+      var df: org.apache.spark.sql.DataFrame = null
+      val jobs = TestSessions.jobsOf(spark) { df = engine.executeStatement(q) }
+      assert(graft.ops.Percentiles.probeRuns.get() == runs,
+        s"planning ran the bounds probe at $slices slices")
+      assert(jobs == 0, s"planning started $jobs jobs at $slices slices")
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("__pct_b"), s"range mode at $slices slices:\n$plan")
+      assert(!plan.toLowerCase.contains("percentile") && !plan.contains("Median"), plan)
+      assert(df.collect().sameElements(spark.sql(q).collect()))
     } finally {
-      spark.conf.set("spark.sql.cbo.enabled", cbo)
-      spark.sql("DROP TABLE IF EXISTS pstats_t")
-      spark.catalog.dropTempView("lineitem")
+      spark.conf.set("spark.sql.shuffle.partitions", before)
+      spark.catalog.dropTempView("customer")
     }
   }
 

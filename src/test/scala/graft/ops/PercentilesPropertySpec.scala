@@ -34,6 +34,9 @@ class PercentilesPropertySpec extends AnyFunSuite {
     .flatMap(n => Gen.listOfN(n, row))
   private val pGen = Gen.oneOf(0.0, 0.1, 0.25, 1.0 / 3, 0.5, 0.65, 0.9, 1.0)
 
+  import Percentiles.Mode
+  private val modes = Seq(Mode.Default, Mode.CollapseTies, Mode.Range)
+
   test("property: every mode matches the buffered percentile bitwise") {
     samples(Gen.zip(dataset, pGen, pGen), 25).foreach { case (rows, p1, p2) =>
       val df = rows.toDF("g", "v", "w")
@@ -41,12 +44,28 @@ class PercentilesPropertySpec extends AnyFunSuite {
         .agg(expr(s"percentile(v, $p1)").as("a"), expr(s"percentile(v, $p2)").as("b"))
         .orderBy("g").as[(String, Option[Double], Option[Double])].collect()
       val specs = Seq(Percentiles.Spec("v", p1, "a"), Percentiles.Spec("v", p2, "b"))
-      for ((ct, rp) <- Seq((false, false), (true, false), (false, true))) {
-        val got = Percentiles.exact(df, Seq("g"), specs,
-            collapseTies = ct, rangePartitioned = rp)
+      for (mode <- modes) {
+        val got = Percentiles.exact(df, Seq("g"), specs, mode, None, Nil, Nil)
           .orderBy("g").as[(String, Option[Double], Option[Double])].collect()
         assert(got.sameElements(ref),
-          s"ct=$ct rp=$rp p=($p1,$p2) got=${got.mkString} ref=${ref.mkString} rows=$rows")
+          s"$mode p=($p1,$p2) got=${got.mkString} ref=${ref.mkString} rows=$rows")
+      }
+    }
+  }
+
+  test("property: global form matches the buffered percentile") {
+    // every global call takes the range path, whose one-partition
+    // buckets come from the bounds probe
+    samples(Gen.zip(dataset, pGen, pGen), 25).foreach { case (rows, p1, p2) =>
+      val df = rows.toDF("g", "v", "w")
+      val ref = df.agg(expr(s"percentile(v, $p1)"), expr(s"percentile(v, $p2)"))
+        .as[(Option[Double], Option[Double])].head()
+      val specs = Seq(Percentiles.Spec("v", p1, "a"), Percentiles.Spec("v", p2, "b"))
+      for (mode <- modes) {
+        val got = Percentiles.exact(df, Nil, specs, mode, None, Nil, Nil)
+          .as[(Option[Double], Option[Double])].collect()
+        assert(got.sameElements(Array(ref)),
+          s"$mode p=($p1,$p2) got=${got.mkString} ref=$ref rows=$rows")
       }
     }
   }
@@ -58,11 +77,11 @@ class PercentilesPropertySpec extends AnyFunSuite {
         .agg(expr(s"percentile(v, $p, w)").as("a"))
         .orderBy("g").as[(String, Option[Double])].collect()
       val specs = Seq(Percentiles.Spec("v", p, "a", weightCol = Some("w")))
-      for (ct <- Seq(false, true)) {
-        val got = Percentiles.exact(df, Seq("g"), specs, collapseTies = ct)
+      for (mode <- Seq(Mode.Default, Mode.CollapseTies)) {
+        val got = Percentiles.exact(df, Seq("g"), specs, mode, None, Nil, Nil)
           .orderBy("g").as[(String, Option[Double])].collect()
         assert(got.sameElements(ref),
-          s"ct=$ct p=$p got=${got.mkString} ref=${ref.mkString} rows=$rows")
+          s"$mode p=$p got=${got.mkString} ref=${ref.mkString} rows=$rows")
       }
     }
   }

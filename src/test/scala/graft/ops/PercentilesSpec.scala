@@ -12,6 +12,13 @@ class PercentilesSpec extends AnyFunSuite {
 
   private lazy val li = Tables.load(spark, TestSessions.sf001, "lineitem")
 
+  import Percentiles.Mode
+  private val modes = Seq(Mode.Default, Mode.CollapseTies, Mode.Range)
+
+  private def inMode(df: org.apache.spark.sql.DataFrame, groupCols: Seq[String],
+      specs: Seq[Percentiles.Spec], mode: Mode) =
+    Percentiles.exact(df, groupCols, specs, mode, None, Nil, Nil)
+
   /** Pinned RDD ids as a detached set (see OpsSpec's `pinnedIds`: building
     * from the iterator copies instead of keeping a view of the map). */
   @noinline
@@ -61,45 +68,37 @@ class PercentilesSpec extends AnyFunSuite {
         expr("percentile(l_extendedprice, 0.9)").as("p90"))
       .orderBy("l_returnflag")
       .as[(String, Double, Double, Double)].collect()
-    for ((collapse, ranged) <- Seq((false, false), (true, false), (false, true))) {
-      val ours = Percentiles.exact(li, Seq("l_returnflag"), Seq(
+    for (mode <- modes) {
+      val ours = inMode(li, Seq("l_returnflag"), Seq(
           Percentiles.Spec("l_quantity", 0.5, "p50"),
           Percentiles.Spec("l_quantity", 0.25, "p25"),
-          Percentiles.Spec("l_extendedprice", 0.9, "p90")),
-          collapseTies = collapse, rangePartitioned = ranged)
+          Percentiles.Spec("l_extendedprice", 0.9, "p90")), mode)
         .orderBy("l_returnflag")
         .as[(String, Double, Double, Double)].collect()
-      assert(ours.sameElements(ref),
-        s"collapseTies=$collapse rangePartitioned=$ranged diverged")
+      assert(ours.sameElements(ref), s"$mode diverged")
     }
   }
 
   test("NULL group keys survive every mode (range mode joined them away pre-r04-review)") {
     val df = Seq((Option.empty[String], Some(1.0)), (None, Some(3.0)),
       (Some("b"), Some(7.0))).toDF("g", "x")
-    for ((collapse, ranged) <- Seq((false, false), (true, false), (false, true))) {
-      val r = Percentiles.exact(df, Seq("g"),
-          Seq(Percentiles.Spec("x", 0.5, "p50")),
-          collapseTies = collapse, rangePartitioned = ranged)
+    for (mode <- modes) {
+      val r = inMode(df, Seq("g"), Seq(Percentiles.Spec("x", 0.5, "p50")), mode)
         .orderBy(col("g").asc_nulls_first)
         .as[(Option[String], Option[Double])].collect()
       assert(r.sameElements(Array((None, Some(2.0)), (Some("b"), Some(7.0)))),
-        s"collapseTies=$collapse rangePartitioned=$ranged: ${r.mkString}")
+        s"$mode: ${r.mkString}")
     }
-    intercept[IllegalArgumentException](Percentiles.exact(df, Seq("g"),
-      Seq(Percentiles.Spec("x", 0.5, "p50")),
-      collapseTies = true, rangePartitioned = true))
   }
 
   test("edge percentiles, single-value groups, nulls, and the global form") {
     val df = Seq(("a", Some(1.0)), ("a", Some(3.0)), ("a", None),
       ("b", Some(7.0)), ("c", None)).toDF("g", "x")
-    for ((collapse, ranged) <- Seq((false, false), (true, false), (false, true))) {
-      val r = Percentiles.exact(df, Seq("g"), Seq(
+    for (mode <- modes) {
+      val r = inMode(df, Seq("g"), Seq(
           Percentiles.Spec("x", 0.0, "p0"),
           Percentiles.Spec("x", 0.5, "p50"),
-          Percentiles.Spec("x", 1.0, "p100")),
-          collapseTies = collapse, rangePartitioned = ranged)
+          Percentiles.Spec("x", 1.0, "p100")), mode)
         .orderBy("g")
         .as[(String, Option[Double], Option[Double], Option[Double])].collect()
       // nulls excluded from ranks; p0/p100 are min/max; p50 of {1,3}
@@ -109,43 +108,36 @@ class PercentilesSpec extends AnyFunSuite {
         ("a", Some(1.0), Some(2.0), Some(3.0)),
         ("b", Some(7.0), Some(7.0), Some(7.0)),
         ("c", None, None, None))),
-        s"collapseTies=$collapse rangePartitioned=$ranged: ${r.mkString}")
+        s"$mode: ${r.mkString}")
     }
-    val global = Percentiles.median(df, Seq.empty, "x", "m").as[Double].head()
-    assert(global == 3.0) // median of {1, 3, 7}
-    assert(Percentiles.exact(df, Seq.empty,
-      Seq(Percentiles.Spec("x", 0.5, "m"))).columns.toSeq == Seq("m"))
+    val global = Percentiles.exact(df, Seq.empty, Seq(Percentiles.Spec("x", 0.5, "m")))
+    assert(global.columns.toSeq == Seq("m"))
+    assert(global.as[Double].head() == 3.0) // median of {1, 3, 7}
   }
 
-  test("adaptive mode dispatches on group cardinality vs shuffle parallelism") {
-    // the pure threshold (VERDICT r04 next #1): range mode exactly when
-    // the (group, column) partition count leaves reducers idle
-    assert(Percentiles.useRangeMode(6, 32)) // q41's 3 groups x 2 cols
-    assert(Percentiles.useRangeMode(1, 32)) // the global percentile
-    assert(!Percentiles.useRangeMode(32, 32))
-    assert(!Percentiles.useRangeMode(100000, 32))
-    assert(!Percentiles.useRangeMode(0, 32)) // empty input: default
-
-    // 3 groups -> the range plan (its bucket column is the signature);
-    // high-cardinality groups -> the default single-window plan. Pin
-    // the engine's production parallelism — the shared test session
-    // runs few shuffle partitions for speed.
+  test("mode follows the call's shape, not a probe") {
+    // no probe and no conf read decides the mode: 3 groups take the
+    // default window sort and the global form the range plan (its bucket
+    // column is the signature) at the test session's slices and at the
+    // engine's 32 alike, each equal to the buffered reference bitwise;
+    // one slice needs no bounds probe at all
+    val specs = Seq(Percentiles.Spec("l_quantity", 0.5, "p50"))
+    val fewRef = li.groupBy("l_returnflag")
+      .agg(expr("percentile(l_quantity, 0.5)").as("p50"))
+      .orderBy("l_returnflag").as[(String, Double)].collect()
+    val globalRef = li.agg(expr("percentile(l_quantity, 0.5)")).as[Double].head()
     val before = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
-      val specs = Seq(Percentiles.Spec("l_quantity", 0.5, "p50"))
-      val few = Percentiles.exactAdaptive(li, Seq("l_returnflag"), specs)
-      assert(few.queryExecution.executedPlan.toString.contains("__pct_b"),
-        "few-giant-groups shape did not take the range-partitioned mode")
-      val many = Percentiles.exactAdaptive(li, Seq("l_orderkey"), specs)
-      assert(!many.queryExecution.executedPlan.toString.contains("__pct_b"),
-        "high-cardinality groups must keep the default per-partition sort")
-      // and the range plan agrees with the buffered reference bitwise
-      val fewRef = li.groupBy("l_returnflag")
-        .agg(expr("percentile(l_quantity, 0.5)").as("p50"))
-        .orderBy("l_returnflag").as[(String, Double)].collect()
+    try for (slices <- Seq("1", "4", "32")) {
+      spark.conf.set("spark.sql.shuffle.partitions", slices)
+      val few = Percentiles.exact(li, Seq("l_returnflag"), specs)
+      assert(!few.queryExecution.executedPlan.toString.contains("__pct_b"),
+        s"grouped call left the default sort at $slices slices")
       assert(few.orderBy("l_returnflag").as[(String, Double)].collect()
         .sameElements(fewRef))
+      val global = Percentiles.exact(li, Nil, specs)
+      assert(global.queryExecution.executedPlan.toString.contains("__pct_b"),
+        s"global form did not take the range mode at $slices slices")
+      assert(global.as[Double].head() == globalRef)
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
@@ -156,10 +148,10 @@ class PercentilesSpec extends AnyFunSuite {
     // independent instantiations agree — union the same plan against
     // itself and assert the pairs line up
     val pinnedBefore = pinnedIds()
-    val a = Percentiles.exact(li, Seq("l_returnflag"),
-      Seq(Percentiles.Spec("l_extendedprice", 0.37, "p")), rangePartitioned = true)
-    val b = Percentiles.exact(li, Seq("l_returnflag"),
-      Seq(Percentiles.Spec("l_extendedprice", 0.37, "p")), rangePartitioned = true)
+    val a = inMode(li, Seq("l_returnflag"),
+      Seq(Percentiles.Spec("l_extendedprice", 0.37, "p")), Mode.Range)
+    val b = inMode(li, Seq("l_returnflag"),
+      Seq(Percentiles.Spec("l_extendedprice", 0.37, "p")), Mode.Range)
     assert(a.join(b, Seq("l_returnflag")).where(a("p") =!= b("p")).count() == 0)
     // and no storage is pinned after execution (the checkpoint leak).
     // Compared with the pins held before the body: an earlier suite's
@@ -175,12 +167,12 @@ class PercentilesSpec extends AnyFunSuite {
     val ref = li.groupBy("l_returnflag")
       .agg(expr("percentile(l_extendedprice, 0.35, l_linenumber)").as("p"))
       .orderBy("l_returnflag").as[(String, Double)].collect()
-    val ours = Percentiles.exact(li, Seq("l_returnflag"), spec)
+    val ours = inMode(li, Seq("l_returnflag"), spec, Mode.Default)
       .orderBy("l_returnflag").as[(String, Double)].collect()
     assert(ours.sameElements(ref))
-    // the tie-collapsing mode (where adaptive routes weighted specs)
+    // the tie-collapsing mode (where `exact` routes weighted specs)
     // agrees too — weights simply replace the tie counts there
-    val tied = Percentiles.exactAdaptive(li, Seq("l_returnflag"), spec)
+    val tied = Percentiles.exact(li, Seq("l_returnflag"), spec)
       .orderBy("l_returnflag").as[(String, Double)].collect()
     assert(tied.sameElements(ref))
     // zero weights drop their rows; negative weights raise, like the
